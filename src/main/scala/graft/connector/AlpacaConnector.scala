@@ -4,16 +4,17 @@ import java.util
 
 import scala.jdk.CollectionConverters._
 
-import com.fasterxml.jackson.databind.JsonNode
+import com.fasterxml.jackson.core.JsonToken
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.execution.vectorized.OnHeapColumnVector
+import org.apache.spark.sql.execution.vectorized.{OnHeapColumnVector, WritableColumnVector}
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import org.apache.spark.sql.vectorized.ColumnarBatch
+import org.apache.spark.sql.vectorized.{ColumnarBatch, ColumnVector}
+import org.apache.spark.unsafe.types.UTF8String
 import org.slf4j.LoggerFactory
 
 import graft.core._
@@ -508,42 +509,30 @@ case class AlpacaScan(sourceDef: AlpacaSourceDef, cfg: AlpacaScanConfig,
       case Some(n) if n < cfg.limit => cfg.copy(limit = math.max(1, n))
       case _ => cfg
     }
-    // timeless sources answer with OBJECT records (one per symbol) —
-    // the vectorized walker is array-envelope-only, and at one row per
-    // symbol a ColumnarBatch buys nothing anyway: stay row-based
     new AlpacaReaderFactory(effectiveCfg, sourceDef.versionedPath,
       sourceDef.dataKey, sourceDef.parser, outSchema, limitOpt,
-      columnar = !sourceDef.timeless,
       checkable = sourceDef.integrityCheckable)
   }
 }
 
+/** Columnar hand-off for every source, batch and micro-batch alike
+  * (the reference's headline feature: one Arrow RecordBatch per API
+  * page, `common.py:461-493`, README.md:15): one ColumnarBatch per
+  * page, consumed by Spark's codegen'd ColumnarToRow wherever a plan
+  * needs rows. Timeless sources emit one row per symbol in the page's
+  * batch. */
 class AlpacaReaderFactory(cfg: AlpacaScanConfig, pathElements: Seq[String],
-    dataKey: String, parser: RecordParser,
-    outSchema: StructType = null,
-    limitOpt: Option[Int] = None,
-    columnar: Boolean = true,
-    checkable: Boolean = false) extends PartitionReaderFactory {
+    dataKey: String, parser: RecordParser, outSchema: StructType,
+    limitOpt: Option[Int], checkable: Boolean) extends PartitionReaderFactory {
 
-  private def schemaOut: StructType =
-    if (outSchema == null) parser.schema else outSchema
-
-  /** Columnar hand-off (the reference's headline feature: one Arrow
-    * RecordBatch per API page, `common.py:461-493`, README.md:15):
-    * one ColumnarBatch per page, consumed by Spark's codegen'd
-    * ColumnarToRow. Batch reads only — the micro-batch stream stays
-    * row-based (stateful streaming plans don't consume columnar). */
-  override def supportColumnarReads(partition: InputPartition): Boolean = columnar
+  override def supportColumnarReads(partition: InputPartition): Boolean = true
 
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    new AlpacaPartitionReader(cfg, pathElements, dataKey, parser,
-      partition.asInstanceOf[SymbolTimeRangePartition], schemaOut, limitOpt,
-      checkable)
+    throw new UnsupportedOperationException("Alpaca scans are read columnar only")
 
   override def createColumnarReader(partition: InputPartition): PartitionReader[ColumnarBatch] =
     new AlpacaColumnarPartitionReader(cfg, pathElements, dataKey, parser,
-      partition.asInstanceOf[SymbolTimeRangePartition], schemaOut, limitOpt,
-      checkable)
+      partition.asInstanceOf[SymbolTimeRangePartition], outSchema, limitOpt, checkable)
 }
 
 /** A scan-integrity invariant failed: the page chain delivered
@@ -553,26 +542,35 @@ class AlpacaReaderFactory(cfg: AlpacaScanConfig, pathElements: Seq[String],
   * transient fault into wrong aggregates. */
 class ScanIntegrityException(msg: String) extends RuntimeException(msg)
 
-/** Shared executor-side page source: paginated HTTP fetch → JSON parse
-  * → per-page InternalRow iterators, fully pipelined (page at a time,
-  * SURVEY §2.3-2.4). Malformed records are warned and skipped (E4);
-  * HTTP failures after retries fail the Spark task (task retry covers
-  * the rest). */
-private[connector] class AlpacaPageSource(cfg: AlpacaScanConfig,
+/** The one partition reader: paginated HTTP fetch → one ColumnarBatch
+  * per API page, fully pipelined (SURVEY §2.3-2.4: the next page's
+  * request is in flight while the current page decodes). Records
+  * decode from the page bytes straight into the column vectors — no
+  * page DOM, no InternalRow. Malformed records are
+  * skipped (E4); HTTP failures after retries fail the Spark task (task
+  * retry covers the rest). */
+class AlpacaColumnarPartitionReader(cfg: AlpacaScanConfig,
     pathElements: Seq[String], dataKey: String, parser: RecordParser,
-    partition: SymbolTimeRangePartition, checkable: Boolean = false) {
+    partition: SymbolTimeRangePartition, outSchema: StructType,
+    limitOpt: Option[Int] = None,
+    checkable: Boolean = false)
+  extends PartitionReader[ColumnarBatch] {
 
   private val log = LoggerFactory.getLogger(getClass)
+
+  /** Parser-schema field index → output ordinal (−1 = pruned). */
+  private val fieldToOut: Array[Int] =
+    parser.schema.fieldNames.map(n => outSchema.fieldNames.indexOf(n))
 
   // ------------------------------------------------ scan integrity
   // Two invariants, on by default for the flat time-series sources
   // (`AlpacaSourceDef.integrityCheckable`), spanning this partition's
   // whole page chain:
-  //  1. COUNT: record objects seen by the consumer's parse walk ==
-  //     the HTTP layer's independent lex count of the same bytes
+  //  1. COUNT: record objects seen by the envelope walk == the HTTP
+  //     layer's independent lex count of the same bytes
   //     (`AlpacaHttpClient.skimPage`, computed on the prefetch
-  //     thread). Catches parser-side drops/duplicates — a vectorized
-  //     walker drifting out of token alignment, a page parsed twice.
+  //     thread). Catches parser-side drops/duplicates — a walker
+  //     drifting out of token alignment, a page parsed twice.
   //  2. ORDER: per symbol, record instants never regress against the
   //     requested sort (non-decreasing asc / non-increasing desc —
   //     NON-strict, because real tick feeds legitimately carry equal
@@ -625,7 +623,7 @@ private[connector] class AlpacaPageSource(cfg: AlpacaScanConfig,
   }
 
   /** Count invariant at end of one page's parse. */
-  private[connector] def verifyPageCount(expected: Long): Unit = {
+  private def verifyPageCount(expected: Long): Unit = {
     if (check && pageRecords != expected)
       throw new ScanIntegrityException(
         s"page record-count mismatch in partition '${partition.symbol}' " +
@@ -635,6 +633,18 @@ private[connector] class AlpacaPageSource(cfg: AlpacaScanConfig,
     pagesVerified += 1
   }
 
+  // ------------------------------------------------ malformed records
+  private var skipped = 0L
+
+  /** The one skip site (E4): the first few malformed records of a
+    * partition are logged one by one, the total once on close(). */
+  private def skip(sym: UTF8String, e: IllegalArgumentException): Unit = {
+    skipped += 1
+    if (skipped <= AlpacaColumnarPartitionReader.LoggedSkips)
+      log.warn(s"Skipping malformed record for $sym: ${e.getMessage}")
+  }
+
+  // ------------------------------------------------ pages
   /** Per-partition parameter binding (P4, `common.py:384-397`):
     * passthrough options with symbol/start/end/limit overridden. */
   private def partitionParams: Seq[(String, String)] = {
@@ -651,138 +661,76 @@ private[connector] class AlpacaPageSource(cfg: AlpacaScanConfig,
     overridden.toSeq.sortBy(_._1)
   }
 
-  /** One row array per API page (page-lazy with one page of async
-    * lookahead: the NEXT page's HTTP request is in flight while the
-    * current page parses). Each page streams token-by-token from raw
-    * bytes straight to rows — no page DOM, no char decode — the
-    * Spark-side analogue of the reference's JSON→Arrow batch seam
-    * (`common.py:461-493`). */
-  private lazy val client = new AlpacaHttpClient(
-    cfg.endpoint,
-    Map(
-      "Content-Type" -> "application/json",
-      "APCA-API-KEY-ID" -> cfg.apiKeyId,
-      "APCA-API-SECRET-KEY" -> cfg.apiKeySecret),
-    pathElements,
-    maxRetries = cfg.maxRetries,
-    readTimeoutSec = cfg.timeoutSec,
-    rateLimitRps = cfg.rateLimitRps)
+  /** Raw page bodies with the skim's independent record count, one
+    * page of async lookahead (the next request is in flight while the
+    * current page decodes). */
+  private lazy val pages: Iterator[AlpacaHttpClient.FetchedPage] =
+    new AlpacaHttpClient(
+      cfg.endpoint,
+      Map(
+        "Content-Type" -> "application/json",
+        "APCA-API-KEY-ID" -> cfg.apiKeyId,
+        "APCA-API-SECRET-KEY" -> cfg.apiKeySecret),
+      pathElements,
+      maxRetries = cfg.maxRetries,
+      readTimeoutSec = cfg.timeoutSec,
+      rateLimitRps = cfg.rateLimitRps)
+      .fetchAllPagesCounted(partitionParams, cfg.rateLimitDelaySec)
 
-  /** Raw page bodies with the skim's independent record count
-    * (prefetched one ahead). */
-  lazy val countedPages: Iterator[AlpacaHttpClient.FetchedPage] =
-    client.fetchAllPagesCounted(partitionParams, cfg.rateLimitDelaySec)
+  private val partitionSymbol = UTF8String.fromString(partition.symbol)
 
-  /** Raw page bodies (prefetched one ahead). */
-  lazy val rawPages: Iterator[Array[Byte]] = countedPages.map(_.bytes)
-
-  lazy val pageArrays: Iterator[Array[InternalRow]] = countedPages.map { p =>
-    val rows = parsePageBytes(p.bytes)
-    verifyPageCount(p.arrayRecordCount)
-    rows
-  }
-
-  lazy val pages: Iterator[Iterator[InternalRow]] = pageArrays.map(_.iterator)
-
-  private def parsePageBytes(bytes: Array[Byte]): Array[InternalRow] = {
-    import com.fasterxml.jackson.core.JsonToken
+  /** The one envelope walk: decodes one page's records into `vecs`
+    * from row 0 and returns the row count. It covers four shapes:
+    *  - keyed arrays `{dataKey: {SYM: [record, …]}}` (the time series);
+    *  - keyed objects `{dataKey: {SYM: record}}` (the `*_Latest`,
+    *    option/crypto-snapshot and orderbook sources);
+    *  - the bare envelope `{SYM: record, …}` (stock snapshots, empty
+    *    dataKey);
+    *  - the flat array `{dataKey: [record, …]}` (news, screeners),
+    *    whose rows carry the partition's own symbol (cross-listed
+    *    articles arrive once per requested symbol; consumers dedup by
+    *    id).
+    * Records past `maxRows` are lex-skipped so the walk stays aligned. */
+  private def parsePageIntoVectors(bytes: Array[Byte],
+      vecs: Array[WritableColumnVector], maxRows: Int): Int = {
     if (check) pageRecords = 0L
-    val jp = AlpacaPageSource.mapper.createParser(bytes)
-    try {
-      val out = new scala.collection.mutable.ArrayBuffer[InternalRow](
-        math.min(cfg.limit, 16384))
-      if (jp.nextToken() != JsonToken.START_OBJECT) return Array.empty
-      var tk = jp.nextToken()
-      while (tk == JsonToken.FIELD_NAME) {
-        val name = jp.currentName()
-        tk = jp.nextToken()
-        if (name == dataKey && tk == JsonToken.START_OBJECT) {
-          var t2 = jp.nextToken()
-          while (t2 == JsonToken.FIELD_NAME) {
-            val sym = jp.currentName()
-            t2 = jp.nextToken()
-            if (t2 == JsonToken.START_ARRAY) {
-              // integrity: one sink per symbol run — `sym` doubles as
-              // the run-identity key for the ordering invariant
-              val sink: InternalRow => Unit =
-                if (check && timeOrdinal >= 0) { r =>
-                  checkInstant(sym, sym, r.getLong(timeOrdinal)); out += r
-                } else out += _
-              var t3 = jp.nextToken()
-              while (t3 != JsonToken.END_ARRAY) {
-                if (t3 == JsonToken.START_OBJECT) {
-                  if (check) pageRecords += 1
-                  // parseStreamMulti: 1:1 for every source except the
-                  // fan-out shapes (auctions: daily record → N prints)
-                  try parser.parseStreamMulti(sym, jp, sink)
-                  catch {
-                    case e: IllegalArgumentException =>
-                      log.warn(s"Skipping malformed record for $sym: ${e.getMessage}")
-                  }
-                } else if (t3.isStructStart) jp.skipChildren()
-                t3 = jp.nextToken()
-              }
-            } else if (t2 == JsonToken.START_OBJECT) {
-              // per-symbol OBJECT value (snapshots): the symbol’s value
-              // IS the single record, not an array of them
-              try parser.parseStreamMulti(sym, jp, out += _)
-              catch {
-                case e: IllegalArgumentException =>
-                  log.warn(s"Skipping malformed record for $sym: ${e.getMessage}")
-              }
-            } else if (t2.isStructStart) jp.skipChildren()
-            t2 = jp.nextToken()
-          }
-        } else if (dataKey.isEmpty && name != "next_page_token" &&
-            tk == JsonToken.START_OBJECT) {
-          // BARE symbol-keyed envelope (snapshots): there is no data
-          // key at all — every top-level field IS a symbol and its
-          // OBJECT value is that symbol's single record
-          try parser.parseStreamMulti(name, jp, out += _)
-          catch {
-            case e: IllegalArgumentException =>
-              log.warn(s"Skipping malformed record for $name: ${e.getMessage}")
-          }
-        } else if (name == dataKey && tk == JsonToken.START_ARRAY) {
-          // FLAT envelope (the news endpoint): records arrive in one
-          // un-keyed array — the partition's own symbol is the `symbol`
-          // column (cross-listed articles arrive once per requested
-          // symbol; consumers dedup by id)
-          var t3 = jp.nextToken()
-          while (t3 != JsonToken.END_ARRAY) {
-            if (t3 == JsonToken.START_OBJECT) {
-              try parser.parseStreamMulti(partition.symbol, jp, out += _)
-              catch {
-                case e: IllegalArgumentException =>
-                  log.warn(s"Skipping malformed record for ${partition.symbol}: " +
-                    e.getMessage)
-              }
-            } else if (t3.isStructStart) jp.skipChildren()
-            t3 = jp.nextToken()
-          }
-        } else if (tk != null && tk.isStructStart) jp.skipChildren()
-        tk = jp.nextToken()
-      }
-      out.toArray
-    } finally jp.close()
-  }
-
-  /** Vectorized twin of parsePageBytes: records decode straight into
-    * the (reused) column vectors — no InternalRow, no boxing. Returns
-    * the row count written; records past `maxRows` are lex-skipped so
-    * the token stream stays aligned with pagination. */
-  def parsePageIntoVectors(bytes: Array[Byte], vp: graft.core.VectorWriteSupport,
-      vecs: Array[org.apache.spark.sql.execution.vectorized.WritableColumnVector],
-      fieldToOut: Array[Int], maxRows: Int): Int = {
-    import com.fasterxml.jackson.core.JsonToken
-    if (check) pageRecords = 0L
-    // ordering invariant needs the instant read back from its output
+    // the ordering invariant reads each instant back from its output
     // vector; a scan that pruned `time` away keeps the count invariant
     // only (the analytic time-series queries this protects always
     // project time)
-    val timeOut = if (check && timeOrdinal >= 0) fieldToOut(timeOrdinal) else -1
-    val jp = AlpacaPageSource.mapper.createParser(bytes)
+    val timeOut = if (timeOrdinal >= 0) fieldToOut(timeOrdinal) else -1
+    val jp = AlpacaColumnarPartitionReader.mapper.createParser(bytes)
     var count = 0
+
+    def record(sym: UTF8String): Unit = {
+      if (check) pageRecords += 1
+      if (count >= maxRows) jp.skipChildren()
+      else {
+        var i = 0
+        while (i < vecs.length) { vecs(i).reserve(count + 1); i += 1 }
+        try {
+          val n = parser.parseIntoVectors(sym, jp, vecs, fieldToOut, count)
+          if (timeOut >= 0) {
+            var r = count
+            while (r < count + n) {
+              checkInstant(sym, sym.toString, vecs(timeOut).getLong(r))
+              r += 1
+            }
+          }
+          count += n
+        } catch { case e: IllegalArgumentException => skip(sym, e) }
+      }
+    }
+
+    def records(sym: UTF8String): Unit = {
+      var tk = jp.nextToken()
+      while (tk != JsonToken.END_ARRAY) {
+        if (tk == JsonToken.START_OBJECT) record(sym)
+        else if (tk.isStructStart) jp.skipChildren()
+        tk = jp.nextToken()
+      }
+    }
+
     try {
       if (jp.nextToken() != JsonToken.START_OBJECT) return 0
       var tk = jp.nextToken()
@@ -792,146 +740,42 @@ private[connector] class AlpacaPageSource(cfg: AlpacaScanConfig,
         if (name == dataKey && tk == JsonToken.START_OBJECT) {
           var t2 = jp.nextToken()
           while (t2 == JsonToken.FIELD_NAME) {
-            val sym = org.apache.spark.unsafe.types.UTF8String.fromString(jp.currentName())
+            val sym = UTF8String.fromString(jp.currentName())
             t2 = jp.nextToken()
-            if (t2 == JsonToken.START_ARRAY) {
-              var t3 = jp.nextToken()
-              while (t3 != JsonToken.END_ARRAY) {
-                if (t3 == JsonToken.START_OBJECT) {
-                  if (check) pageRecords += 1
-                  if (count >= maxRows) jp.skipChildren()
-                  else {
-                    var i = 0
-                    while (i < vecs.length) { vecs(i).reserve(count + 1); i += 1 }
-                    try {
-                      vp.parseIntoVectors(sym, jp, vecs, fieldToOut, count)
-                      if (timeOut >= 0)
-                        checkInstant(sym, sym.toString, vecs(timeOut).getLong(count))
-                      count += 1
-                    } catch {
-                      case e: IllegalArgumentException =>
-                        log.warn(s"Skipping malformed record for $sym: ${e.getMessage}")
-                    }
-                  }
-                } else if (t3.isStructStart) jp.skipChildren()
-                t3 = jp.nextToken()
-              }
-            } else if (t2.isStructStart) jp.skipChildren()
+            if (t2 == JsonToken.START_ARRAY) records(sym)
+            else if (t2 == JsonToken.START_OBJECT) record(sym)
             t2 = jp.nextToken()
           }
-        } else if (tk != null && tk.isStructStart) jp.skipChildren()
+        } else if (name == dataKey && tk == JsonToken.START_ARRAY) records(partitionSymbol)
+        else if (dataKey.isEmpty && tk == JsonToken.START_OBJECT)
+          record(UTF8String.fromString(name))
+        else if (tk != null && tk.isStructStart) jp.skipChildren()
         tk = jp.nextToken()
       }
-      count
+      math.min(count, maxRows)
     } finally jp.close()
   }
-}
 
-private[connector] object AlpacaPageSource {
-  /** Shared, thread-safe; createParser carries the codec needed by
-    * tree-based parseStream fallbacks. */
-  val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-}
-
-/** Row-at-a-time reader (micro-batch streaming path; batch reads go
-  * through the columnar reader below). */
-class AlpacaPartitionReader(cfg: AlpacaScanConfig, pathElements: Seq[String],
-    dataKey: String, parser: RecordParser, partition: SymbolTimeRangePartition,
-    outSchema: StructType, limitOpt: Option[Int] = None,
-    checkable: Boolean = false)
-  extends PartitionReader[InternalRow] {
-
-  /** Pruned-column projection: ordinal+type pairs from the full row. */
-  private val projection: Option[Array[(Int, org.apache.spark.sql.types.DataType)]] =
-    if (outSchema.fieldNames.sameElements(parser.schema.fieldNames)) None
-    else Some(outSchema.fields.map { f =>
-      (parser.schema.fieldIndex(f.name), f.dataType)
-    })
-
+  // ------------------------------------------------ batches
   private var emitted = 0L
-
-  private lazy val rows: Iterator[InternalRow] =
-    new AlpacaPageSource(cfg, pathElements, dataKey, parser, partition, checkable)
-      .pages.flatten
-
-  private var current: InternalRow = _
-  override def next(): Boolean =
-    if (limitOpt.exists(emitted >= _)) false
-    else if (rows.hasNext) {
-      val full = rows.next()
-      current = projection match {
-        case None => full
-        case Some(proj) =>
-          InternalRow.fromSeq(proj.toSeq.map { case (i, dt) => full.get(i, dt) })
-      }
-      emitted += 1
-      true
-    } else false
-  override def get(): InternalRow = current
-  override def close(): Unit = ()
-}
-
-/** Columnar reader: one ColumnarBatch per API page — the Spark-native
-  * analogue of the reference's one-PyArrow-RecordBatch-per-page
-  * (`common.py:461-493`). Downstream operators consume the vectors
-  * through whole-stage-codegen'd ColumnarToRow, skipping per-row
-  * iterator overhead on scan-heavy queries. */
-class AlpacaColumnarPartitionReader(cfg: AlpacaScanConfig,
-    pathElements: Seq[String], dataKey: String, parser: RecordParser,
-    partition: SymbolTimeRangePartition, outSchema: StructType,
-    limitOpt: Option[Int] = None,
-    checkable: Boolean = false)
-  extends PartitionReader[ColumnarBatch] {
-
-  /** Output-field ordinal in the parser's full row + its type. */
-  private val ordinals: Array[(Int, org.apache.spark.sql.types.DataType)] =
-    outSchema.fields.map(f => (parser.schema.fieldIndex(f.name), f.dataType))
-
-  /** Inverse map: parser-schema field index → output ordinal (−1 =
-    * pruned), for the direct token→vector decode. */
-  private val fieldToOut: Array[Int] = {
-    val m = Array.fill(parser.schema.length)(-1)
-    ordinals.zipWithIndex.foreach { case ((ord, _), outIdx) => m(ord) = outIdx }
-    m
-  }
-
-  private lazy val pageSource =
-    new AlpacaPageSource(cfg, pathElements, dataKey, parser, partition, checkable)
-
-  private lazy val pages: Iterator[Array[InternalRow]] = pageSource.pageArrays
-
-  private var emitted = 0L
+  // vectors live for the whole partition and are reset (buffers kept)
+  // per page, as Spark's own vectorized parquet reader does
+  private var vecs: Array[OnHeapColumnVector] = _
   private var batch: ColumnarBatch = _
-  // vectorized path state: vectors live for the whole partition and
-  // are reset (buffers kept) per page, as Spark's own vectorized
-  // parquet reader does
-  private var reusedVecs: Array[OnHeapColumnVector] = _
 
-  override def next(): Boolean = parser match {
-    case vp: graft.core.VectorWriteSupport => nextVectorized(vp)
-    case _ => nextRowFill()
-  }
-
-  /** Direct decode: HTTP bytes → Jackson tokens → column vectors.
-    * No InternalRow or boxed field values exist on this path. */
-  private def nextVectorized(vp: graft.core.VectorWriteSupport): Boolean = {
+  override def next(): Boolean = {
     if (limitOpt.exists(emitted >= _)) return false
-    if (reusedVecs == null) {
-      reusedVecs = OnHeapColumnVector.allocateColumns(
-        math.min(cfg.limit, 16384), outSchema)
-      batch = new ColumnarBatch(
-        reusedVecs.asInstanceOf[Array[org.apache.spark.sql.vectorized.ColumnVector]], 0)
+    if (vecs == null) {
+      vecs = OnHeapColumnVector.allocateColumns(math.min(cfg.limit, 16384), outSchema)
+      batch = new ColumnarBatch(vecs.asInstanceOf[Array[ColumnVector]], 0)
     }
-    val raw = pageSource.countedPages
-    while (raw.hasNext) {
-      val page = raw.next()
-      var i = 0
-      while (i < reusedVecs.length) { reusedVecs(i).reset(); i += 1 }
-      val maxRows = limitOpt.map(l => (l - emitted).toInt).getOrElse(Int.MaxValue)
-      val n = pageSource.parsePageIntoVectors(page.bytes, vp, reusedVecs
-        .asInstanceOf[Array[org.apache.spark.sql.execution.vectorized.WritableColumnVector]],
-        fieldToOut, maxRows)
-      pageSource.verifyPageCount(page.arrayRecordCount)
+    while (pages.hasNext) {
+      val page = pages.next()
+      vecs.foreach(_.reset())
+      val maxRows = limitOpt.fold(Int.MaxValue)(l => (l - emitted).toInt)
+      val n = parsePageIntoVectors(page.bytes,
+        vecs.asInstanceOf[Array[WritableColumnVector]], maxRows)
+      verifyPageCount(page.arrayRecordCount)
       if (n > 0) {
         batch.setNumRows(n)
         emitted += n
@@ -941,52 +785,23 @@ class AlpacaColumnarPartitionReader(cfg: AlpacaScanConfig,
     false
   }
 
-  private def nextRowFill(): Boolean = {
-    close() // release the previous page's vectors
-    if (limitOpt.exists(emitted >= _)) return false
-    while (pages.hasNext) {
-      var rows = pages.next()
-      limitOpt.foreach { lim =>
-        if (rows.length > lim - emitted) rows = rows.take((lim - emitted).toInt)
-      }
-      if (rows.nonEmpty) {
-        batch = fillBatch(rows)
-        emitted += rows.length
-        return true
-      }
-    }
-    false
-  }
-
-  private def fillBatch(rows: Array[InternalRow]): ColumnarBatch = {
-    import org.apache.spark.sql.types._
-    val vecs = OnHeapColumnVector.allocateColumns(rows.length, outSchema)
-    var c = 0
-    while (c < ordinals.length) {
-      val (ord, dt) = ordinals(c)
-      val vec = vecs(c)
-      var i = 0
-      while (i < rows.length) {
-        val row = rows(i)
-        if (row.isNullAt(ord)) vec.putNull(i)
-        else dt match {
-          case StringType =>
-            val b = row.getUTF8String(ord).getBytes
-            vec.putByteArray(i, b, 0, b.length)
-          case TimestampType | LongType => vec.putLong(i, row.getLong(ord))
-          case DoubleType => vec.putDouble(i, row.getDouble(ord))
-          case IntegerType => vec.putInt(i, row.getInt(ord))
-          case other =>
-            throw new UnsupportedOperationException(s"columnar type $other")
-        }
-        i += 1
-      }
-      c += 1
-    }
-    new ColumnarBatch(vecs.asInstanceOf[Array[org.apache.spark.sql.vectorized.ColumnVector]], rows.length)
-  }
-
   override def get(): ColumnarBatch = batch
-  override def close(): Unit =
+
+  override def close(): Unit = {
+    if (skipped > 0) {
+      log.warn(s"Skipped $skipped malformed record(s) in partition '${partition.symbol}' " +
+        s"[${partition.startMicros},${partition.endMicros})")
+      skipped = 0
+    }
     if (batch != null) { batch.close(); batch = null }
+  }
+}
+
+object AlpacaColumnarPartitionReader {
+  /** Shared, thread-safe; the parsers it creates carry the codec the
+    * DOM record parsers read their subtrees with. */
+  private[connector] val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+
+  /** Malformed records logged one by one per partition. */
+  private val LoggedSkips = 10
 }

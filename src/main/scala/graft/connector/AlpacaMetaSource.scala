@@ -167,7 +167,7 @@ class AlpacaMetaReaderFactory(sourceDef: MetaSourceDef, endpoint: String,
         // value → name; anything non-string is skipped structurally
         // (tolerant of additive drift like nested detail objects)
         val bytes = client.getPageBytes(sourceDef.query(params), None)
-        val jp = AlpacaPageSource.mapper.createParser(bytes)
+        val jp = AlpacaColumnarPartitionReader.mapper.createParser(bytes)
         val out = Seq.newBuilder[InternalRow]
         try {
           if (jp.nextToken() != JsonToken.START_OBJECT)

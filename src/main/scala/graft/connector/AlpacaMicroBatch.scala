@@ -3,8 +3,6 @@ package graft.connector
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReaderFactory}
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, SupportsAdmissionControl}
 
-import graft.core.RecordParser
-
 /** Stream offset = high-water mark in epoch micros (self-describing,
   * so checkpoint restart needs no external state). */
 case class TimeOffset(micros: Long) extends Offset {
@@ -56,8 +54,8 @@ class AlpacaMicroBatchStream(
     sourceDef: AlpacaSourceDef,
     cfg: AlpacaScanConfig,
     stepMicros: Long,
-    outSchema: org.apache.spark.sql.types.StructType = null,
-    limitOpt: Option[Int] = None)
+    outSchema: org.apache.spark.sql.types.StructType,
+    limitOpt: Option[Int])
   extends MicroBatchStream with SupportsAdmissionControl {
 
   override def initialOffset(): Offset = TimeOffset(cfg.startMicros)
@@ -98,8 +96,7 @@ class AlpacaMicroBatchStream(
     * honored so emitted batches always match readSchema(). */
   override def createReaderFactory(): PartitionReaderFactory =
     new AlpacaReaderFactory(cfg, sourceDef.versionedPath, sourceDef.dataKey,
-      sourceDef.parser, outSchema, limitOpt,
-      checkable = sourceDef.integrityCheckable)
+      sourceDef.parser, outSchema, limitOpt, checkable = sourceDef.integrityCheckable)
 
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()

@@ -278,8 +278,8 @@ object OptionQuotesDef extends AlpacaSourceDef {
   * bars/trades only — auctions complete the daily-lifecycle surface).
   * The endpoint's record is a DAILY envelope (`d` + `o`/`c` print
   * arrays), the one fan-out record shape in the API: the parser
-  * flattens each daily record to one row per print via
-  * parseStreamMulti. Pagination counts daily records (the API's own
+  * flattens each daily record to one row per print (its decode
+  * returns the print count). Pagination counts daily records (the API's own
   * unit), so the default 1-day partition interval gives at most a
   * handful of records per request — estimatedRowsPerSymbol bounds the
   * scan for the cost model at 8 prints/day. */

@@ -6,7 +6,7 @@ import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.nio.charset.StandardCharsets
 import java.time.Duration
 
-import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import com.fasterxml.jackson.databind.ObjectMapper
 import org.slf4j.LoggerFactory
 
 /** Pure, Spark-free HTTP/pagination core (the testable seam of
@@ -123,16 +123,6 @@ class AlpacaHttpClient(
     throw new IllegalStateException("unreachable")
   }
 
-  /** DOM variant of getPageBytes (diagnostics + small responses). */
-  def getPage(params: Seq[(String, String)], pageToken: Option[String]): JsonNode =
-    mapper.readTree(getPageBytes(params, pageToken))
-
-  private def pageToken(pg: JsonNode): Option[String] =
-    Option(pg.get("next_page_token"))
-      .filter(n => !n.isNull)
-      .map(_.asText())
-      .filter(_.nonEmpty)
-
   /** Streaming skim for `next_page_token` PLUS an independent record
     * count — one lex-only pass over the whole page (the old token-only
     * skim `skipChildren`'d the data field, which lexes the same bytes
@@ -188,34 +178,22 @@ class AlpacaHttpClient(
     } finally jp.close()
   }
 
-  /** Lazy page iterator: yields each page's JSON while a
-    * `next_page_token` is present.
+  /** Lazy page iterator: yields each page's raw bytes with the skim's
+    * independent record count (see [[skimPage]]; the reader's
+    * scan-integrity cross-check consumes it) while a
+    * `next_page_token` is present. The consumer stream-parses each
+    * page; the token needed to chain requests comes from the cheap
+    * lex-only skim, so the full parse stays on the consumer's side of
+    * the pipeline.
     *
     * With no rate-limit delay, the NEXT page's HTTP request is issued
-    * asynchronously as soon as the current page's JSON arrives, so
+    * asynchronously as soon as the current page's bytes arrive, so
     * network/server time overlaps the consumer's parse time (the
     * multi-page chain is each partition's critical path; the reference
     * fetches strictly sequentially, `common.py:166-205`). One page of
     * lookahead bounds buffered memory at a single response body. When
     * `rateLimitDelaySec` is configured, pagination stays strictly
     * sequential so the inter-page sleep keeps its meaning (H5). */
-  def fetchAllPages(
-      params: Seq[(String, String)],
-      rateLimitDelaySec: Double = 0.0): Iterator[JsonNode] =
-    fetchAllPagesBytes(params, rateLimitDelaySec).map(b => mapper.readTree(b))
-
-  /** Raw-bytes pagination. The consumer stream-parses each page; the
-    * `next_page_token` needed to chain requests comes from a cheap
-    * lex-only skim, so the full parse stays on the consumer's side of
-    * the pipeline. */
-  def fetchAllPagesBytes(
-      params: Seq[(String, String)],
-      rateLimitDelaySec: Double = 0.0): Iterator[Array[Byte]] =
-    fetchAllPagesCounted(params, rateLimitDelaySec).map(_.bytes)
-
-  /** Pagination with the skim's independent per-page record count
-    * attached (see [[skimPage]]) — the readers' scan-integrity
-    * cross-check consumes this form. */
   def fetchAllPagesCounted(
       params: Seq[(String, String)],
       rateLimitDelaySec: Double = 0.0): Iterator[AlpacaHttpClient.FetchedPage] =

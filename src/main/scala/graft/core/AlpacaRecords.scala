@@ -1,7 +1,12 @@
 package graft.core
 
+import java.nio.charset.StandardCharsets
+
+import scala.annotation.switch
+
+import com.fasterxml.jackson.core.{JsonParser, JsonToken}
 import com.fasterxml.jackson.databind.JsonNode
-import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.execution.vectorized.WritableColumnVector
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -149,60 +154,153 @@ object Schemas {
       "price DOUBLE, size DOUBLE")
 }
 
-/** Per-record projection of an API JSON object into an InternalRow
-  * (the reference's only expression evaluation, SURVEY §2.4 E1-E3).
-  * Throws IllegalArgumentException on malformed records; the reader
-  * warns + skips (E4, `common.py:484-486`). */
+/** Decodes one API record straight into output column vectors — the
+  * one decode path of every source (SURVEY §2.4 E1-E3): HTTP bytes →
+  * Jackson tokens → column vectors → codegen'd ColumnarToRow.
+  *
+  * Contract: enter ON the record's START_OBJECT and consume the record
+  * through its END_OBJECT. A malformed record throws
+  * IllegalArgumentException with the record consumed all the same, so
+  * the reader can warn and skip it (E4, `common.py:484-486`) and reuse
+  * its row slots: whatever a failed record wrote at or after `row` is
+  * overwritten by the next record. */
 trait RecordParser extends Serializable {
   def schema: StructType
-  def parse(symbol: String, rec: JsonNode): InternalRow
 
-  /** Streaming parse of one record: the parser must be positioned ON
-    * the record's START_OBJECT and, on success, is left ON its
-    * END_OBJECT. Default materializes just this record's subtree and
-    * delegates to [[parse]] — hot sources override with a token walk
-    * (no DOM at all). On failure the token stream is realigned to the
-    * record's END_OBJECT before rethrowing, so the caller can warn +
-    * skip and continue with the next record (E4 semantics). */
-  def parseStream(symbol: String, jp: com.fasterxml.jackson.core.JsonParser): InternalRow = {
-    val node = jp.readValueAsTree[JsonNode]()
-    parse(symbol, node)
+  /** @param fieldToOut output-vector ordinal for each field of
+    *   [[schema]] (−1 = pruned away); `vecs` is indexed by those
+    *   output ordinals.
+    * @return rows written from `row` on: 1 for a plain record, 0..N
+    *   for a fan-out record (auctions, orderbooks) */
+  def parseIntoVectors(symbol: UTF8String, jp: JsonParser,
+      vecs: Array[WritableColumnVector], fieldToOut: Array[Int], row: Int): Int
+
+  protected final def putStr(vecs: Array[WritableColumnVector], out: Int, row: Int,
+      s: String): Unit =
+    if (out >= 0) {
+      val b = s.getBytes(StandardCharsets.UTF_8)
+      vecs(out).putByteArray(row, b, 0, b.length)
+    }
+
+  protected final def putUtf8(vecs: Array[WritableColumnVector], out: Int, row: Int,
+      s: UTF8String): Unit =
+    if (out >= 0) {
+      val b = s.getBytes
+      vecs(out).putByteArray(row, b, 0, b.length)
+    }
+}
+
+object FlatRecordParser {
+  // Field kinds. The required ones fail the record when absent or null;
+  // the optional ones default to "".
+  final val Time = 0
+  final val Dbl = 1
+  final val Lng = 2
+  final val Str = 3
+  /** Optional array of condition codes, joined to CSV (reference:
+    * `stocks/trades.py:128`). */
+  final val Csv = 4
+  /** Optional scalar string (the option-record condition). */
+  final val OptStr = 5
+}
+
+/** A flat tick/bar record of scalar fields, `{t, …}`: record field `i`
+  * lands in schema column `i + 1` (column 0 is the symbol). One token
+  * walk serves all of them, with no per-record DOM; a null field reads
+  * as absent and unknown keys (additive schema drift) are skipped. */
+abstract class FlatRecordParser(override val schema: StructType,
+    fields: (String, Int)*) extends RecordParser {
+  import FlatRecordParser._
+
+  private val names = fields.map(_._1).toArray
+  private val kinds = fields.map(_._2).toArray
+  private val required =
+    kinds.indices.foldLeft(0)((m, i) => if (kinds(i) < Csv) m | (1 << i) else m)
+
+  /** Index of field `name`, probing from `from` first: the API writes
+    * fields in a fixed order, so the probe almost always hits. */
+  private def indexOf(name: String, from: Int): Int = {
+    var i = from
+    var k = 0
+    while (k < names.length) {
+      if (i == names.length) i = 0
+      if (names(i) == name) return i
+      i += 1
+      k += 1
+    }
+    -1
   }
 
-  /** One API record → N output rows. Most sources are 1:1 (default
-    * delegates to [[parseStream]]); fan-out sources (auctions: one
-    * daily record holds arrays of prints) override. Same positioning
-    * contract as parseStream; on failure NOTHING may have been emitted
-    * via `out` (validate the whole record before the first emit) so
-    * the caller's warn+skip drops the record atomically. */
-  def parseStreamMulti(symbol: String,
-      jp: com.fasterxml.jackson.core.JsonParser,
-      out: InternalRow => Unit): Unit =
-    out(parseStream(symbol, jp))
+  /** Numeric and string fields write through as they are read; the
+    * seen-mask gates completeness once the record ends. */
+  override def parseIntoVectors(symbol: UTF8String, jp: JsonParser,
+      vecs: Array[WritableColumnVector], fieldToOut: Array[Int], row: Int): Int = {
+    var seen = 0
+    var next = 0
+    try {
+      var tk = jp.nextToken()
+      while (tk == JsonToken.FIELD_NAME) {
+        val i = indexOf(jp.currentName(), next)
+        val vt = jp.nextToken()
+        if (i < 0 || vt == JsonToken.VALUE_NULL) {
+          if (vt.isStructStart) jp.skipChildren()
+        } else {
+          val out = fieldToOut(i + 1)
+          val key = names(i)
+          (kinds(i): @switch) match {
+            case Time =>
+              val v = streamTs(jp, key)
+              if (out >= 0) vecs(out).putLong(row, v)
+            case Dbl =>
+              val v = streamDbl(jp, key)
+              if (out >= 0) vecs(out).putDouble(row, v)
+            case Lng =>
+              val v = streamLng(jp, key)
+              if (out >= 0) vecs(out).putLong(row, v)
+            case Csv => putStr(vecs, out, row, streamCsv(jp, key))
+            case _ => putStr(vecs, out, row, streamStr(jp, key))
+          }
+          seen |= 1 << i
+          next = i + 1
+        }
+        tk = jp.nextToken()
+      }
+    } catch { case e: Throwable => skipRecord(jp); throw e }
+    if ((seen & required) != required)
+      throw new IllegalArgumentException(
+        s"missing field '${names(Integer.numberOfTrailingZeros(~seen & required))}'")
+    var i = 0
+    while (i < names.length) {
+      if ((seen & (1 << i)) == 0) putStr(vecs, fieldToOut(i + 1), row, "")
+      i += 1
+    }
+    putUtf8(vecs, fieldToOut(0), row, symbol)
+    1
+  }
 
   /** Realign to the current record's END_OBJECT after a mid-record
     * failure (value tokens already consumed are scalars; an
     * unconsumed struct value is skipped wholesale). */
-  protected final def skipRecord(jp: com.fasterxml.jackson.core.JsonParser): Unit = {
+  private def skipRecord(jp: JsonParser): Unit = {
     try {
       var tk = jp.currentToken()
       if (tk != null && tk.isStructStart) jp.skipChildren()
       tk = jp.nextToken()
-      while (tk != null && tk != com.fasterxml.jackson.core.JsonToken.END_OBJECT) {
+      while (tk != null && tk != JsonToken.END_OBJECT) {
         if (tk.isStructStart) jp.skipChildren()
         tk = jp.nextToken()
       }
     } catch { case _: java.io.IOException => () }
   }
 
-  protected final def streamTs(jp: com.fasterxml.jackson.core.JsonParser, key: String): Long = {
+  private def streamTs(jp: JsonParser, key: String): Long = {
     val raw = jp.getText
     AlpacaOptions.parseIsoMicros(raw).getOrElse(
       throw new IllegalArgumentException(s"bad timestamp '$raw' in '$key'"))
   }
 
-  protected final def streamDbl(jp: com.fasterxml.jackson.core.JsonParser, key: String): Double = {
-    import com.fasterxml.jackson.core.JsonToken._
+  private def streamDbl(jp: JsonParser, key: String): Double = {
+    import JsonToken._
     jp.currentToken() match {
       case VALUE_NUMBER_INT | VALUE_NUMBER_FLOAT => jp.getDoubleValue
       case VALUE_STRING =>
@@ -213,8 +311,8 @@ trait RecordParser extends Serializable {
     }
   }
 
-  protected final def streamLng(jp: com.fasterxml.jackson.core.JsonParser, key: String): Long = {
-    import com.fasterxml.jackson.core.JsonToken._
+  private def streamLng(jp: JsonParser, key: String): Long = {
+    import JsonToken._
     jp.currentToken() match {
       case VALUE_NUMBER_INT => jp.getLongValue
       case VALUE_NUMBER_FLOAT => jp.getDoubleValue.toLong
@@ -226,7 +324,112 @@ trait RecordParser extends Serializable {
     }
   }
 
-  protected def utf8(s: String): UTF8String = UTF8String.fromString(s)
+  /** A scalar read as text; an array or object here is record-level
+    * damage, and `getText` on it would leave the walk mid-struct. */
+  private def streamStr(jp: JsonParser, key: String): String = {
+    if (!jp.currentToken().isScalarValue)
+      throw new IllegalArgumentException(s"bad string in '$key'")
+    jp.getText
+  }
+
+  /** An array of scalar codes joined to CSV; any other value reads as
+    * no codes. */
+  private def streamCsv(jp: JsonParser, key: String): String =
+    if (jp.currentToken() != JsonToken.START_ARRAY) { jp.skipChildren(); "" }
+    else {
+      val sb = new java.lang.StringBuilder
+      while (jp.nextToken() != JsonToken.END_ARRAY) {
+        if (sb.length > 0) sb.append(',')
+        sb.append(streamStr(jp, key))
+      }
+      sb.toString
+    }
+}
+
+import FlatRecordParser._
+
+/** `{t,o,h,l,c,v,n,vw}` → bar row (reference: `bars.py:199-225`). */
+object BarParser extends FlatRecordParser(Schemas.bars,
+  "t" -> Time, "o" -> Dbl, "h" -> Dbl, "l" -> Dbl, "c" -> Dbl,
+  "v" -> Lng, "n" -> Lng, "vw" -> Dbl)
+
+/** `{t,x,p,s,c,i,z}` → trade row; the `c` array of condition codes is
+  * flattened to a CSV string, absent → "" (reference:
+  * `stocks/trades.py:113-140`, join at `:128`). */
+object TradeParser extends FlatRecordParser(Schemas.trades,
+  "t" -> Time, "x" -> Str, "p" -> Dbl, "s" -> Lng, "c" -> Csv,
+  "i" -> Lng, "z" -> Str)
+
+/** `{t,p,s,i,tks}` → crypto trade row (public Alpaca v1beta3 crypto
+  * record shape; no reference code exists to mirror —
+  * `crypto/__init__.py:1` is empty). `s` stays a DOUBLE (fractional
+  * sizes), `tks` is the taker side. */
+object CryptoTradeParser extends FlatRecordParser(Schemas.cryptoTrades,
+  "t" -> Time, "p" -> Dbl, "s" -> Dbl, "i" -> Lng, "tks" -> Str)
+
+/** `{t,ax,ap,as,bx,bp,bs,c,z}` → stock NBBO quote row (public Alpaca
+  * v2 quote shape; the `c` condition array flattens to CSV like
+  * trades). */
+object StockQuoteParser extends FlatRecordParser(Schemas.stockQuotes,
+  "t" -> Time, "ax" -> Str, "ap" -> Dbl, "as" -> Lng,
+  "bx" -> Str, "bp" -> Dbl, "bs" -> Lng, "c" -> Csv, "z" -> Str)
+
+/** `{t,bp,bs,ap,as}` → crypto quote row (public Alpaca v1beta3 quote
+  * shape). */
+object CryptoQuoteParser extends FlatRecordParser(Schemas.cryptoQuotes,
+  "t" -> Time, "bp" -> Dbl, "bs" -> Dbl, "ap" -> Dbl, "as" -> Dbl)
+
+/** `{t,x,p,s,c}` → option trade row (public Alpaca v2 options trade
+  * shape; the reference's options family has bars only,
+  * `options/bars.py:17-48`). Unlike stock trades the `c` condition is
+  * a SCALAR string, absent → "", and there is no id/tape. */
+object OptionTradeParser extends FlatRecordParser(Schemas.optionTrades,
+  "t" -> Time, "x" -> Str, "p" -> Dbl, "s" -> Lng, "c" -> OptStr)
+
+/** `{t,ax,ap,as,bx,bp,bs,c}` → option NBBO quote row (public Alpaca
+  * v2 options quote shape): integer contract sizes, scalar `c`
+  * condition, no tape. */
+object OptionQuoteParser extends FlatRecordParser(Schemas.optionQuotes,
+  "t" -> Time, "ax" -> Str, "ap" -> Dbl, "as" -> Lng,
+  "bx" -> Str, "bp" -> Dbl, "bs" -> Lng, "c" -> OptStr)
+
+/** The low-rate record shapes — news, corporate actions, auctions,
+  * orderbooks, snapshots, screeners — read each record as a small DOM:
+  * nested sections and fan-out are plain there, and at a handful of
+  * records per page a token walk buys nothing. All of a record's rows
+  * are built, and so validated, before the first is written: a
+  * malformed record is skipped as a unit (E4). */
+abstract class DomRecordParser extends RecordParser {
+  /** One record → its output rows, each a schema-ordered value list:
+    * String or UTF8String, Long (BIGINT and TIMESTAMP µs), Double,
+    * Int, or null for SQL NULL. */
+  protected def rows(symbol: UTF8String, rec: JsonNode): Seq[Seq[Any]]
+
+  final override def parseIntoVectors(symbol: UTF8String, jp: JsonParser,
+      vecs: Array[WritableColumnVector], fieldToOut: Array[Int], row: Int): Int = {
+    // readValueAsTree consumes the whole record, so a validation
+    // failure in rows() leaves the stream aligned
+    val out = rows(symbol, jp.readValueAsTree[JsonNode]())
+    var r = row
+    out.foreach { values =>
+      vecs.foreach(_.reserve(r + 1))
+      var c = 0
+      values.foreach { v =>
+        val o = fieldToOut(c)
+        if (o >= 0) v match {
+          case null => vecs(o).putNull(r)
+          case s: String => putStr(vecs, o, r, s)
+          case s: UTF8String => putUtf8(vecs, o, r, s)
+          case l: Long => vecs(o).putLong(r, l)
+          case d: Double => vecs(o).putDouble(r, d)
+          case i: Int => vecs(o).putInt(r, i)
+        }
+        c += 1
+      }
+      r += 1
+    }
+    out.size
+  }
 
   protected def reqNode(rec: JsonNode, key: String): JsonNode = {
     val n = rec.get(key)
@@ -254,1065 +457,199 @@ trait RecordParser extends Serializable {
     catch { case _: NumberFormatException =>
       throw new IllegalArgumentException(s"bad long '$n' in '$key'") }
   }
-}
-
-/** Direct token→vector decode: implemented by parsers whose records
-  * can be written straight into a ColumnarBatch's vectors with no
-  * InternalRow (and no boxing) in between — the end state of the
-  * scan path: HTTP bytes → Jackson tokens → column vectors →
-  * codegen'd ColumnarToRow. Contract mirrors [[RecordParser.parseStream]]:
-  * enter ON the record's START_OBJECT, leave ON its END_OBJECT, and
-  * realign before rethrowing so the caller can warn+skip. On failure
-  * the row slot may hold partial values — the caller must not advance
-  * the row index, so the next record overwrites it. */
-trait VectorWriteSupport { self: RecordParser =>
-  /** @param fieldToOut output-vector ordinal for each field of
-    *   [[RecordParser.schema]] (−1 = pruned away). `vecs` is indexed
-    *   by those output ordinals. */
-  def parseIntoVectors(symbol: UTF8String,
-      jp: com.fasterxml.jackson.core.JsonParser,
-      vecs: Array[org.apache.spark.sql.execution.vectorized.WritableColumnVector],
-      fieldToOut: Array[Int], row: Int): Unit
-
-  protected final def putStr(
-      vecs: Array[org.apache.spark.sql.execution.vectorized.WritableColumnVector],
-      out: Int, row: Int, s: UTF8String): Unit =
-    if (out >= 0) {
-      val b = s.getBytes
-      vecs(out).putByteArray(row, b, 0, b.length)
-    }
-}
-
-/** `{t,o,h,l,c,v,n,vw}` → bar row (reference: `bars.py:199-225`). */
-object BarParser extends RecordParser with VectorWriteSupport {
-  override val schema: StructType = Schemas.bars
-  override def parse(symbol: String, rec: JsonNode): InternalRow =
-    InternalRow(
-      utf8(symbol),
-      isoMicros(rec, "t"),
-      dbl(rec, "o"), dbl(rec, "h"), dbl(rec, "l"), dbl(rec, "c"),
-      lng(rec, "v"), lng(rec, "n"),
-      dbl(rec, "vw"))
-
-  /** Token walk — no per-record DOM. A null or absent field surfaces
-    * as the same missing-field error the DOM path raises. */
-  override def parseStream(symbol: String,
-      jp: com.fasterxml.jackson.core.JsonParser): InternalRow = {
-    import com.fasterxml.jackson.core.JsonToken
-    var tUs = 0L
-    var o = 0d; var h = 0d; var l = 0d; var c = 0d; var vw = 0d
-    var v = 0L; var n = 0L
-    var seen = 0
-    try {
-      var tk = jp.nextToken()
-      while (tk == JsonToken.FIELD_NAME) {
-        val name = jp.currentName()
-        val vt = jp.nextToken()
-        if (vt == JsonToken.VALUE_NULL) () // same as absent
-        else name match {
-          case "t" => tUs = streamTs(jp, "t"); seen |= 1
-          case "o" => o = streamDbl(jp, "o"); seen |= 2
-          case "h" => h = streamDbl(jp, "h"); seen |= 4
-          case "l" => l = streamDbl(jp, "l"); seen |= 8
-          case "c" => c = streamDbl(jp, "c"); seen |= 16
-          case "v" => v = streamLng(jp, "v"); seen |= 32
-          case "n" => n = streamLng(jp, "n"); seen |= 64
-          case "vw" => vw = streamDbl(jp, "vw"); seen |= 128
-          case _ => if (vt.isStructStart) jp.skipChildren()
-        }
-        tk = jp.nextToken()
-      }
-    } catch { case e: Throwable => skipRecord(jp); throw e }
-    if (seen != 255) {
-      val names = Array("t", "o", "h", "l", "c", "v", "n", "vw")
-      throw new IllegalArgumentException(
-        s"missing field '${names(Integer.numberOfTrailingZeros(~seen))}'")
-    }
-    InternalRow(utf8(symbol), tUs, o, h, l, c, v, n, vw)
+  /** Optional text; absent/null → `default`. */
+  protected def text(rec: JsonNode, key: String, default: String = ""): String = {
+    val n = rec.get(key)
+    if (n == null || n.isNull) default else n.asText()
   }
-
-  /** Same walk as parseStream, values landing in the vectors.
-    * Numeric/timestamp fields write through immediately (a failed
-    * record's partial writes are overwritten when the slot is
-    * reused); the seen-mask still gates completeness. */
-  override def parseIntoVectors(symbol: UTF8String,
-      jp: com.fasterxml.jackson.core.JsonParser,
-      vecs: Array[org.apache.spark.sql.execution.vectorized.WritableColumnVector],
-      fieldToOut: Array[Int], row: Int): Unit = {
-    import com.fasterxml.jackson.core.JsonToken
-    def putD(out: Int, v: Double): Unit = if (out >= 0) vecs(out).putDouble(row, v)
-    def putL(out: Int, v: Long): Unit = if (out >= 0) vecs(out).putLong(row, v)
-    var seen = 0
-    try {
-      var tk = jp.nextToken()
-      while (tk == JsonToken.FIELD_NAME) {
-        val name = jp.currentName()
-        val vt = jp.nextToken()
-        if (vt == JsonToken.VALUE_NULL) () // same as absent
-        else name match {
-          case "t" => putL(fieldToOut(1), streamTs(jp, "t")); seen |= 1
-          case "o" => putD(fieldToOut(2), streamDbl(jp, "o")); seen |= 2
-          case "h" => putD(fieldToOut(3), streamDbl(jp, "h")); seen |= 4
-          case "l" => putD(fieldToOut(4), streamDbl(jp, "l")); seen |= 8
-          case "c" => putD(fieldToOut(5), streamDbl(jp, "c")); seen |= 16
-          case "v" => putL(fieldToOut(6), streamLng(jp, "v")); seen |= 32
-          case "n" => putL(fieldToOut(7), streamLng(jp, "n")); seen |= 64
-          case "vw" => putD(fieldToOut(8), streamDbl(jp, "vw")); seen |= 128
-          case _ => if (vt.isStructStart) jp.skipChildren()
-        }
-        tk = jp.nextToken()
-      }
-    } catch { case e: Throwable => skipRecord(jp); throw e }
-    if (seen != 255) {
-      val names = Array("t", "o", "h", "l", "c", "v", "n", "vw")
-      throw new IllegalArgumentException(
-        s"missing field '${names(Integer.numberOfTrailingZeros(~seen))}'")
-    }
-    putStr(vecs, fieldToOut(0), row, symbol)
+  /** Optional timestamp; absent/null/empty → NULL. */
+  protected def optIsoMicros(rec: JsonNode, key: String): Any = {
+    val raw = text(rec, key)
+    if (raw.isEmpty) null
+    else AlpacaOptions.parseIsoMicros(raw).getOrElse(
+      throw new IllegalArgumentException(s"bad timestamp in '$key'"))
   }
-}
-
-/** `{t,x,p,s,c,i,z}` → trade row; the `c` array of condition codes is
-  * flattened to a CSV string (reference: `stocks/trades.py:113-140`,
-  * join at `:128`). */
-object TradeParser extends RecordParser with VectorWriteSupport {
-  override val schema: StructType = Schemas.trades
-  override def parse(symbol: String, rec: JsonNode): InternalRow = {
-    val condNode = rec.get("c")
-    val conditions =
-      if (condNode == null || condNode.isNull) ""
-      else {
-        val it = condNode.elements()
-        val sb = new StringBuilder
-        while (it.hasNext) {
-          if (sb.nonEmpty) sb.append(',')
-          sb.append(it.next().asText())
-        }
-        sb.toString
-      }
-    InternalRow(
-      utf8(symbol),
-      isoMicros(rec, "t"),
-      utf8(reqNode(rec, "x").asText()),
-      dbl(rec, "p"),
-      lng(rec, "s"),
-      utf8(conditions),
-      lng(rec, "i"),
-      utf8(reqNode(rec, "z").asText()))
+  /** Optional nested object: absent/null → None (its columns NULL); a
+    * present non-object fails the record. */
+  protected def section(rec: JsonNode, key: String): Option[JsonNode] = {
+    val n = rec.get(key)
+    if (n == null || n.isNull) None
+    else if (!n.isObject)
+      throw new IllegalArgumentException(s"snapshot '$key' is not an object")
+    else Some(n)
   }
-
-  /** Token walk; the `c` condition array is joined to CSV in-stream
-    * (absent/null `c` → empty string, like the DOM path). */
-  override def parseStream(symbol: String,
-      jp: com.fasterxml.jackson.core.JsonParser): InternalRow = {
-    import com.fasterxml.jackson.core.JsonToken
-    var tUs = 0L; var p = 0d; var s = 0L; var id = 0L
-    var x: String = null; var z: String = null
-    var conditions = ""
-    var seen = 0
-    try {
-      var tk = jp.nextToken()
-      while (tk == JsonToken.FIELD_NAME) {
-        val name = jp.currentName()
-        val vt = jp.nextToken()
-        if (vt == JsonToken.VALUE_NULL) () // absent/null → default or missing
-        else name match {
-          case "t" => tUs = streamTs(jp, "t"); seen |= 1
-          case "x" => x = jp.getText; seen |= 2
-          case "p" => p = streamDbl(jp, "p"); seen |= 4
-          case "s" => s = streamLng(jp, "s"); seen |= 8
-          case "i" => id = streamLng(jp, "i"); seen |= 16
-          case "z" => z = jp.getText; seen |= 32
-          case "c" =>
-            if (vt == JsonToken.START_ARRAY) {
-              val sb = new java.lang.StringBuilder
-              var t2 = jp.nextToken()
-              while (t2 != JsonToken.END_ARRAY) {
-                if (sb.length > 0) sb.append(',')
-                sb.append(jp.getText)
-                t2 = jp.nextToken()
-              }
-              conditions = sb.toString
-            } else if (vt.isStructStart) jp.skipChildren()
-          case _ => if (vt.isStructStart) jp.skipChildren()
-        }
-        tk = jp.nextToken()
-      }
-    } catch { case e: Throwable => skipRecord(jp); throw e }
-    if (seen != 63) {
-      val names = Array("t", "x", "p", "s", "i", "z")
-      throw new IllegalArgumentException(
-        s"missing field '${names(Integer.numberOfTrailingZeros(~seen))}'")
-    }
-    InternalRow(utf8(symbol), tUs, utf8(x), p, s, utf8(conditions), id, utf8(z))
-  }
-
-  /** Vector twin of the token walk. Strings are held in locals and
-    * written only after the record validates, so failed records leave
-    * no bytes in the string vectors' child buffers. Schema order:
-    * symbol, time, exchange, price, size, conditions, id, tape. */
-  override def parseIntoVectors(symbol: UTF8String,
-      jp: com.fasterxml.jackson.core.JsonParser,
-      vecs: Array[org.apache.spark.sql.execution.vectorized.WritableColumnVector],
-      fieldToOut: Array[Int], row: Int): Unit = {
-    import com.fasterxml.jackson.core.JsonToken
-    def putD(out: Int, v: Double): Unit = if (out >= 0) vecs(out).putDouble(row, v)
-    def putL(out: Int, v: Long): Unit = if (out >= 0) vecs(out).putLong(row, v)
-    var x: String = null; var z: String = null
-    var conditions = ""
-    var seen = 0
-    try {
-      var tk = jp.nextToken()
-      while (tk == JsonToken.FIELD_NAME) {
-        val name = jp.currentName()
-        val vt = jp.nextToken()
-        if (vt == JsonToken.VALUE_NULL) ()
-        else name match {
-          case "t" => putL(fieldToOut(1), streamTs(jp, "t")); seen |= 1
-          case "x" => x = jp.getText; seen |= 2
-          case "p" => putD(fieldToOut(3), streamDbl(jp, "p")); seen |= 4
-          case "s" => putL(fieldToOut(4), streamLng(jp, "s")); seen |= 8
-          case "i" => putL(fieldToOut(6), streamLng(jp, "i")); seen |= 16
-          case "z" => z = jp.getText; seen |= 32
-          case "c" =>
-            if (vt == JsonToken.START_ARRAY) {
-              val sb = new java.lang.StringBuilder
-              var t2 = jp.nextToken()
-              while (t2 != JsonToken.END_ARRAY) {
-                if (sb.length > 0) sb.append(',')
-                sb.append(jp.getText)
-                t2 = jp.nextToken()
-              }
-              conditions = sb.toString
-            } else if (vt.isStructStart) jp.skipChildren()
-          case _ => if (vt.isStructStart) jp.skipChildren()
-        }
-        tk = jp.nextToken()
-      }
-    } catch { case e: Throwable => skipRecord(jp); throw e }
-    if (seen != 63) {
-      val names = Array("t", "x", "p", "s", "i", "z")
-      throw new IllegalArgumentException(
-        s"missing field '${names(Integer.numberOfTrailingZeros(~seen))}'")
-    }
-    putStr(vecs, fieldToOut(0), row, symbol)
-    putStr(vecs, fieldToOut(2), row, utf8(x))
-    putStr(vecs, fieldToOut(5), row, utf8(conditions))
-    putStr(vecs, fieldToOut(7), row, utf8(z))
-  }
-}
-
-/** `{t,p,s,i,tks}` → crypto trade row (public Alpaca v1beta3 crypto
-  * record shape; no reference code exists to mirror —
-  * `crypto/__init__.py:1` is empty). `s` stays a DOUBLE (fractional
-  * sizes), `tks` is the taker side. Token-walk + vector paths follow
-  * the stock TradeParser pattern exactly. */
-object CryptoTradeParser extends RecordParser with VectorWriteSupport {
-  override val schema: StructType = Schemas.cryptoTrades
-
-  private val FieldNames = Array("t", "p", "s", "i", "tks")
-  private val AllSeen = 31
-
-  override def parse(symbol: String, rec: JsonNode): InternalRow =
-    InternalRow(
-      utf8(symbol),
-      isoMicros(rec, "t"),
-      dbl(rec, "p"),
-      dbl(rec, "s"),
-      lng(rec, "i"),
-      utf8(reqNode(rec, "tks").asText()))
-
-  override def parseStream(symbol: String,
-      jp: com.fasterxml.jackson.core.JsonParser): InternalRow = {
-    import com.fasterxml.jackson.core.JsonToken
-    var tUs = 0L; var p = 0d; var s = 0d; var id = 0L
-    var tks: String = null
-    var seen = 0
-    try {
-      var tk = jp.nextToken()
-      while (tk == JsonToken.FIELD_NAME) {
-        val name = jp.currentName()
-        val vt = jp.nextToken()
-        if (vt == JsonToken.VALUE_NULL) ()
-        else name match {
-          case "t" => tUs = streamTs(jp, "t"); seen |= 1
-          case "p" => p = streamDbl(jp, "p"); seen |= 2
-          case "s" => s = streamDbl(jp, "s"); seen |= 4
-          case "i" => id = streamLng(jp, "i"); seen |= 8
-          case "tks" => tks = jp.getText; seen |= 16
-          case _ => if (vt.isStructStart) jp.skipChildren()
-        }
-        tk = jp.nextToken()
-      }
-    } catch { case e: Throwable => skipRecord(jp); throw e }
-    if (seen != AllSeen)
-      throw new IllegalArgumentException(
-        s"missing field '${FieldNames(Integer.numberOfTrailingZeros(~seen))}'")
-    InternalRow(utf8(symbol), tUs, p, s, id, utf8(tks))
-  }
-
-  /** Vector twin. Schema order: symbol, time, price, size, id,
-    * taker_side; strings written only after the record validates. */
-  override def parseIntoVectors(symbol: UTF8String,
-      jp: com.fasterxml.jackson.core.JsonParser,
-      vecs: Array[org.apache.spark.sql.execution.vectorized.WritableColumnVector],
-      fieldToOut: Array[Int], row: Int): Unit = {
-    import com.fasterxml.jackson.core.JsonToken
-    def putD(out: Int, v: Double): Unit = if (out >= 0) vecs(out).putDouble(row, v)
-    def putL(out: Int, v: Long): Unit = if (out >= 0) vecs(out).putLong(row, v)
-    var tks: String = null
-    var seen = 0
-    try {
-      var tk = jp.nextToken()
-      while (tk == JsonToken.FIELD_NAME) {
-        val name = jp.currentName()
-        val vt = jp.nextToken()
-        if (vt == JsonToken.VALUE_NULL) ()
-        else name match {
-          case "t" => putL(fieldToOut(1), streamTs(jp, "t")); seen |= 1
-          case "p" => putD(fieldToOut(2), streamDbl(jp, "p")); seen |= 2
-          case "s" => putD(fieldToOut(3), streamDbl(jp, "s")); seen |= 4
-          case "i" => putL(fieldToOut(4), streamLng(jp, "i")); seen |= 8
-          case "tks" => tks = jp.getText; seen |= 16
-          case _ => if (vt.isStructStart) jp.skipChildren()
-        }
-        tk = jp.nextToken()
-      }
-    } catch { case e: Throwable => skipRecord(jp); throw e }
-    if (seen != AllSeen)
-      throw new IllegalArgumentException(
-        s"missing field '${FieldNames(Integer.numberOfTrailingZeros(~seen))}'")
-    putStr(vecs, fieldToOut(0), row, symbol)
-    putStr(vecs, fieldToOut(5), row, utf8(tks))
-  }
-}
-
-/** `{t,ax,ap,as,bx,bp,bs,c,z}` → stock NBBO quote row (public Alpaca
-  * v2 quote shape; the `c` condition array flattens to CSV like
-  * trades, absent/null `c` → empty string). */
-object StockQuoteParser extends RecordParser with VectorWriteSupport {
-  override val schema: StructType = Schemas.stockQuotes
-
-  private val FieldNames = Array("t", "ax", "ap", "as", "bx", "bp", "bs", "z")
-  private val AllSeen = 255
-
-  override def parse(symbol: String, rec: JsonNode): InternalRow = {
-    val condNode = rec.get("c")
-    val conditions =
-      if (condNode == null || condNode.isNull) ""
-      else {
-        val it = condNode.elements()
-        val sb = new StringBuilder
-        while (it.hasNext) {
-          if (sb.nonEmpty) sb.append(',')
-          sb.append(it.next().asText())
-        }
-        sb.toString
-      }
-    InternalRow(
-      utf8(symbol),
-      isoMicros(rec, "t"),
-      utf8(reqNode(rec, "ax").asText()),
-      dbl(rec, "ap"),
-      lng(rec, "as"),
-      utf8(reqNode(rec, "bx").asText()),
-      dbl(rec, "bp"),
-      lng(rec, "bs"),
-      utf8(conditions),
-      utf8(reqNode(rec, "z").asText()))
-  }
-
-  override def parseStream(symbol: String,
-      jp: com.fasterxml.jackson.core.JsonParser): InternalRow = {
-    import com.fasterxml.jackson.core.JsonToken
-    var tUs = 0L; var ap = 0d; var bp = 0d
-    var asz = 0L; var bsz = 0L
-    var ax: String = null; var bx: String = null; var z: String = null
-    var conditions = ""
-    var seen = 0
-    try {
-      var tk = jp.nextToken()
-      while (tk == JsonToken.FIELD_NAME) {
-        val name = jp.currentName()
-        val vt = jp.nextToken()
-        if (vt == JsonToken.VALUE_NULL) ()
-        else name match {
-          case "t" => tUs = streamTs(jp, "t"); seen |= 1
-          case "ax" => ax = jp.getText; seen |= 2
-          case "ap" => ap = streamDbl(jp, "ap"); seen |= 4
-          case "as" => asz = streamLng(jp, "as"); seen |= 8
-          case "bx" => bx = jp.getText; seen |= 16
-          case "bp" => bp = streamDbl(jp, "bp"); seen |= 32
-          case "bs" => bsz = streamLng(jp, "bs"); seen |= 64
-          case "z" => z = jp.getText; seen |= 128
-          case "c" =>
-            if (vt == JsonToken.START_ARRAY) {
-              val sb = new java.lang.StringBuilder
-              var t2 = jp.nextToken()
-              while (t2 != JsonToken.END_ARRAY) {
-                if (sb.length > 0) sb.append(',')
-                sb.append(jp.getText)
-                t2 = jp.nextToken()
-              }
-              conditions = sb.toString
-            } else if (vt.isStructStart) jp.skipChildren()
-          case _ => if (vt.isStructStart) jp.skipChildren()
-        }
-        tk = jp.nextToken()
-      }
-    } catch { case e: Throwable => skipRecord(jp); throw e }
-    if (seen != AllSeen)
-      throw new IllegalArgumentException(
-        s"missing field '${FieldNames(Integer.numberOfTrailingZeros(~seen))}'")
-    InternalRow(utf8(symbol), tUs, utf8(ax), ap, asz, utf8(bx), bp, bsz,
-      utf8(conditions), utf8(z))
-  }
-
-  /** Vector twin. Schema order: symbol, time, ask_exchange, ask_price,
-    * ask_size, bid_exchange, bid_price, bid_size, conditions, tape;
-    * strings written only after the record validates. */
-  override def parseIntoVectors(symbol: UTF8String,
-      jp: com.fasterxml.jackson.core.JsonParser,
-      vecs: Array[org.apache.spark.sql.execution.vectorized.WritableColumnVector],
-      fieldToOut: Array[Int], row: Int): Unit = {
-    import com.fasterxml.jackson.core.JsonToken
-    def putD(out: Int, v: Double): Unit = if (out >= 0) vecs(out).putDouble(row, v)
-    def putL(out: Int, v: Long): Unit = if (out >= 0) vecs(out).putLong(row, v)
-    var ax: String = null; var bx: String = null; var z: String = null
-    var conditions = ""
-    var seen = 0
-    try {
-      var tk = jp.nextToken()
-      while (tk == JsonToken.FIELD_NAME) {
-        val name = jp.currentName()
-        val vt = jp.nextToken()
-        if (vt == JsonToken.VALUE_NULL) ()
-        else name match {
-          case "t" => putL(fieldToOut(1), streamTs(jp, "t")); seen |= 1
-          case "ax" => ax = jp.getText; seen |= 2
-          case "ap" => putD(fieldToOut(3), streamDbl(jp, "ap")); seen |= 4
-          case "as" => putL(fieldToOut(4), streamLng(jp, "as")); seen |= 8
-          case "bx" => bx = jp.getText; seen |= 16
-          case "bp" => putD(fieldToOut(6), streamDbl(jp, "bp")); seen |= 32
-          case "bs" => putL(fieldToOut(7), streamLng(jp, "bs")); seen |= 64
-          case "z" => z = jp.getText; seen |= 128
-          case "c" =>
-            if (vt == JsonToken.START_ARRAY) {
-              val sb = new java.lang.StringBuilder
-              var t2 = jp.nextToken()
-              while (t2 != JsonToken.END_ARRAY) {
-                if (sb.length > 0) sb.append(',')
-                sb.append(jp.getText)
-                t2 = jp.nextToken()
-              }
-              conditions = sb.toString
-            } else if (vt.isStructStart) jp.skipChildren()
-          case _ => if (vt.isStructStart) jp.skipChildren()
-        }
-        tk = jp.nextToken()
-      }
-    } catch { case e: Throwable => skipRecord(jp); throw e }
-    if (seen != AllSeen)
-      throw new IllegalArgumentException(
-        s"missing field '${FieldNames(Integer.numberOfTrailingZeros(~seen))}'")
-    putStr(vecs, fieldToOut(0), row, symbol)
-    putStr(vecs, fieldToOut(2), row, utf8(ax))
-    putStr(vecs, fieldToOut(5), row, utf8(bx))
-    putStr(vecs, fieldToOut(8), row, utf8(conditions))
-    putStr(vecs, fieldToOut(9), row, utf8(z))
-  }
-}
-
-/** `{t,bp,bs,ap,as}` → crypto quote row (public Alpaca v1beta3 quote
-  * shape). Same token-walk + vector discipline as the trade parsers. */
-object CryptoQuoteParser extends RecordParser with VectorWriteSupport {
-  override val schema: StructType = Schemas.cryptoQuotes
-
-  private val FieldNames = Array("t", "bp", "bs", "ap", "as")
-  private val AllSeen = 31
-
-  override def parse(symbol: String, rec: JsonNode): InternalRow =
-    InternalRow(
-      utf8(symbol),
-      isoMicros(rec, "t"),
-      dbl(rec, "bp"),
-      dbl(rec, "bs"),
-      dbl(rec, "ap"),
-      dbl(rec, "as"))
-
-  override def parseStream(symbol: String,
-      jp: com.fasterxml.jackson.core.JsonParser): InternalRow = {
-    import com.fasterxml.jackson.core.JsonToken
-    var tUs = 0L; var bp = 0d; var bs = 0d; var ap = 0d; var asz = 0d
-    var seen = 0
-    try {
-      var tk = jp.nextToken()
-      while (tk == JsonToken.FIELD_NAME) {
-        val name = jp.currentName()
-        val vt = jp.nextToken()
-        if (vt == JsonToken.VALUE_NULL) ()
-        else name match {
-          case "t" => tUs = streamTs(jp, "t"); seen |= 1
-          case "bp" => bp = streamDbl(jp, "bp"); seen |= 2
-          case "bs" => bs = streamDbl(jp, "bs"); seen |= 4
-          case "ap" => ap = streamDbl(jp, "ap"); seen |= 8
-          case "as" => asz = streamDbl(jp, "as"); seen |= 16
-          case _ => if (vt.isStructStart) jp.skipChildren()
-        }
-        tk = jp.nextToken()
-      }
-    } catch { case e: Throwable => skipRecord(jp); throw e }
-    if (seen != AllSeen)
-      throw new IllegalArgumentException(
-        s"missing field '${FieldNames(Integer.numberOfTrailingZeros(~seen))}'")
-    InternalRow(utf8(symbol), tUs, bp, bs, ap, asz)
-  }
-
-  /** Vector twin. Schema order: symbol, time, bid_price, bid_size,
-    * ask_price, ask_size. */
-  override def parseIntoVectors(symbol: UTF8String,
-      jp: com.fasterxml.jackson.core.JsonParser,
-      vecs: Array[org.apache.spark.sql.execution.vectorized.WritableColumnVector],
-      fieldToOut: Array[Int], row: Int): Unit = {
-    import com.fasterxml.jackson.core.JsonToken
-    def putD(out: Int, v: Double): Unit = if (out >= 0) vecs(out).putDouble(row, v)
-    def putL(out: Int, v: Long): Unit = if (out >= 0) vecs(out).putLong(row, v)
-    var seen = 0
-    try {
-      var tk = jp.nextToken()
-      while (tk == JsonToken.FIELD_NAME) {
-        val name = jp.currentName()
-        val vt = jp.nextToken()
-        if (vt == JsonToken.VALUE_NULL) ()
-        else name match {
-          case "t" => putL(fieldToOut(1), streamTs(jp, "t")); seen |= 1
-          case "bp" => putD(fieldToOut(2), streamDbl(jp, "bp")); seen |= 2
-          case "bs" => putD(fieldToOut(3), streamDbl(jp, "bs")); seen |= 4
-          case "ap" => putD(fieldToOut(4), streamDbl(jp, "ap")); seen |= 8
-          case "as" => putD(fieldToOut(5), streamDbl(jp, "as")); seen |= 16
-          case _ => if (vt.isStructStart) jp.skipChildren()
-        }
-        tk = jp.nextToken()
-      }
-    } catch { case e: Throwable => skipRecord(jp); throw e }
-    if (seen != AllSeen)
-      throw new IllegalArgumentException(
-        s"missing field '${FieldNames(Integer.numberOfTrailingZeros(~seen))}'")
-    putStr(vecs, fieldToOut(0), row, symbol)
-  }
-}
-
-/** `{t,x,p,s,c}` → option trade row (public Alpaca v2 options trade
-  * shape; the reference's options family has bars only,
-  * `options/bars.py:17-48`). Unlike stock trades the `c` condition is
-  * a SCALAR string, not an array — absent/null → empty string — and
-  * there is no id/tape. */
-object OptionTradeParser extends RecordParser with VectorWriteSupport {
-  override val schema: StructType = Schemas.optionTrades
-
-  private val FieldNames = Array("t", "x", "p", "s")
-  private val AllSeen = 15
-
-  override def parse(symbol: String, rec: JsonNode): InternalRow = {
-    val condNode = rec.get("c")
-    val condition =
-      if (condNode == null || condNode.isNull) "" else condNode.asText()
-    InternalRow(
-      utf8(symbol),
-      isoMicros(rec, "t"),
-      utf8(reqNode(rec, "x").asText()),
-      dbl(rec, "p"),
-      lng(rec, "s"),
-      utf8(condition))
-  }
-
-  override def parseStream(symbol: String,
-      jp: com.fasterxml.jackson.core.JsonParser): InternalRow = {
-    import com.fasterxml.jackson.core.JsonToken
-    var tUs = 0L; var p = 0d; var s = 0L
-    var x: String = null; var condition = ""
-    var seen = 0
-    try {
-      var tk = jp.nextToken()
-      while (tk == JsonToken.FIELD_NAME) {
-        val name = jp.currentName()
-        val vt = jp.nextToken()
-        if (vt == JsonToken.VALUE_NULL) ()
-        else name match {
-          case "t" => tUs = streamTs(jp, "t"); seen |= 1
-          case "x" => x = jp.getText; seen |= 2
-          case "p" => p = streamDbl(jp, "p"); seen |= 4
-          case "s" => s = streamLng(jp, "s"); seen |= 8
-          case "c" =>
-            if (vt.isStructStart) jp.skipChildren() else condition = jp.getText
-          case _ => if (vt.isStructStart) jp.skipChildren()
-        }
-        tk = jp.nextToken()
-      }
-    } catch { case e: Throwable => skipRecord(jp); throw e }
-    if (seen != AllSeen)
-      throw new IllegalArgumentException(
-        s"missing field '${FieldNames(Integer.numberOfTrailingZeros(~seen))}'")
-    InternalRow(utf8(symbol), tUs, utf8(x), p, s, utf8(condition))
-  }
-
-  /** Vector twin. Schema order: symbol, time, exchange, price, size,
-    * condition; strings written only after the record validates. */
-  override def parseIntoVectors(symbol: UTF8String,
-      jp: com.fasterxml.jackson.core.JsonParser,
-      vecs: Array[org.apache.spark.sql.execution.vectorized.WritableColumnVector],
-      fieldToOut: Array[Int], row: Int): Unit = {
-    import com.fasterxml.jackson.core.JsonToken
-    def putD(out: Int, v: Double): Unit = if (out >= 0) vecs(out).putDouble(row, v)
-    def putL(out: Int, v: Long): Unit = if (out >= 0) vecs(out).putLong(row, v)
-    var x: String = null; var condition = ""
-    var seen = 0
-    try {
-      var tk = jp.nextToken()
-      while (tk == JsonToken.FIELD_NAME) {
-        val name = jp.currentName()
-        val vt = jp.nextToken()
-        if (vt == JsonToken.VALUE_NULL) ()
-        else name match {
-          case "t" => putL(fieldToOut(1), streamTs(jp, "t")); seen |= 1
-          case "x" => x = jp.getText; seen |= 2
-          case "p" => putD(fieldToOut(3), streamDbl(jp, "p")); seen |= 4
-          case "s" => putL(fieldToOut(4), streamLng(jp, "s")); seen |= 8
-          case "c" =>
-            if (vt.isStructStart) jp.skipChildren() else condition = jp.getText
-          case _ => if (vt.isStructStart) jp.skipChildren()
-        }
-        tk = jp.nextToken()
-      }
-    } catch { case e: Throwable => skipRecord(jp); throw e }
-    if (seen != AllSeen)
-      throw new IllegalArgumentException(
-        s"missing field '${FieldNames(Integer.numberOfTrailingZeros(~seen))}'")
-    putStr(vecs, fieldToOut(0), row, symbol)
-    putStr(vecs, fieldToOut(2), row, utf8(x))
-    putStr(vecs, fieldToOut(5), row, utf8(condition))
-  }
-}
-
-/** `{t,ax,ap,as,bx,bp,bs,c}` → option NBBO quote row (public Alpaca
-  * v2 options quote shape): integer contract sizes, scalar `c`
-  * condition (absent/null → empty string), no tape. */
-object OptionQuoteParser extends RecordParser with VectorWriteSupport {
-  override val schema: StructType = Schemas.optionQuotes
-
-  private val FieldNames = Array("t", "ax", "ap", "as", "bx", "bp", "bs")
-  private val AllSeen = 127
-
-  override def parse(symbol: String, rec: JsonNode): InternalRow = {
-    val condNode = rec.get("c")
-    val condition =
-      if (condNode == null || condNode.isNull) "" else condNode.asText()
-    InternalRow(
-      utf8(symbol),
-      isoMicros(rec, "t"),
-      utf8(reqNode(rec, "ax").asText()),
-      dbl(rec, "ap"),
-      lng(rec, "as"),
-      utf8(reqNode(rec, "bx").asText()),
-      dbl(rec, "bp"),
-      lng(rec, "bs"),
-      utf8(condition))
-  }
-
-  override def parseStream(symbol: String,
-      jp: com.fasterxml.jackson.core.JsonParser): InternalRow = {
-    import com.fasterxml.jackson.core.JsonToken
-    var tUs = 0L; var ap = 0d; var bp = 0d
-    var asz = 0L; var bsz = 0L
-    var ax: String = null; var bx: String = null; var condition = ""
-    var seen = 0
-    try {
-      var tk = jp.nextToken()
-      while (tk == JsonToken.FIELD_NAME) {
-        val name = jp.currentName()
-        val vt = jp.nextToken()
-        if (vt == JsonToken.VALUE_NULL) ()
-        else name match {
-          case "t" => tUs = streamTs(jp, "t"); seen |= 1
-          case "ax" => ax = jp.getText; seen |= 2
-          case "ap" => ap = streamDbl(jp, "ap"); seen |= 4
-          case "as" => asz = streamLng(jp, "as"); seen |= 8
-          case "bx" => bx = jp.getText; seen |= 16
-          case "bp" => bp = streamDbl(jp, "bp"); seen |= 32
-          case "bs" => bsz = streamLng(jp, "bs"); seen |= 64
-          case "c" =>
-            if (vt.isStructStart) jp.skipChildren() else condition = jp.getText
-          case _ => if (vt.isStructStart) jp.skipChildren()
-        }
-        tk = jp.nextToken()
-      }
-    } catch { case e: Throwable => skipRecord(jp); throw e }
-    if (seen != AllSeen)
-      throw new IllegalArgumentException(
-        s"missing field '${FieldNames(Integer.numberOfTrailingZeros(~seen))}'")
-    InternalRow(utf8(symbol), tUs, utf8(ax), ap, asz, utf8(bx), bp, bsz,
-      utf8(condition))
-  }
-
-  /** Vector twin. Schema order: symbol, time, ask_exchange, ask_price,
-    * ask_size, bid_exchange, bid_price, bid_size, condition. */
-  override def parseIntoVectors(symbol: UTF8String,
-      jp: com.fasterxml.jackson.core.JsonParser,
-      vecs: Array[org.apache.spark.sql.execution.vectorized.WritableColumnVector],
-      fieldToOut: Array[Int], row: Int): Unit = {
-    import com.fasterxml.jackson.core.JsonToken
-    def putD(out: Int, v: Double): Unit = if (out >= 0) vecs(out).putDouble(row, v)
-    def putL(out: Int, v: Long): Unit = if (out >= 0) vecs(out).putLong(row, v)
-    var ax: String = null; var bx: String = null; var condition = ""
-    var seen = 0
-    try {
-      var tk = jp.nextToken()
-      while (tk == JsonToken.FIELD_NAME) {
-        val name = jp.currentName()
-        val vt = jp.nextToken()
-        if (vt == JsonToken.VALUE_NULL) ()
-        else name match {
-          case "t" => putL(fieldToOut(1), streamTs(jp, "t")); seen |= 1
-          case "ax" => ax = jp.getText; seen |= 2
-          case "ap" => putD(fieldToOut(3), streamDbl(jp, "ap")); seen |= 4
-          case "as" => putL(fieldToOut(4), streamLng(jp, "as")); seen |= 8
-          case "bx" => bx = jp.getText; seen |= 16
-          case "bp" => putD(fieldToOut(6), streamDbl(jp, "bp")); seen |= 32
-          case "bs" => putL(fieldToOut(7), streamLng(jp, "bs")); seen |= 64
-          case "c" =>
-            if (vt.isStructStart) jp.skipChildren() else condition = jp.getText
-          case _ => if (vt.isStructStart) jp.skipChildren()
-        }
-        tk = jp.nextToken()
-      }
-    } catch { case e: Throwable => skipRecord(jp); throw e }
-    if (seen != AllSeen)
-      throw new IllegalArgumentException(
-        s"missing field '${FieldNames(Integer.numberOfTrailingZeros(~seen))}'")
-    putStr(vecs, fieldToOut(0), row, symbol)
-    putStr(vecs, fieldToOut(2), row, utf8(ax))
-    putStr(vecs, fieldToOut(5), row, utf8(bx))
-    putStr(vecs, fieldToOut(8), row, utf8(condition))
-  }
+  protected def optDbl(o: Option[JsonNode], key: String): Any = o.map(dbl(_, key)).orNull
+  protected def optLng(o: Option[JsonNode], key: String): Any = o.map(lng(_, key)).orNull
 }
 
 /** Corporate-action row with nullable dates and defaults; `ratio`
   * defaults to 0.0 as the reference code does (not the 1.0 its schema
   * comment claims — `corporate_actions.py:101` vs `:164`). */
-object CorporateActionParser extends RecordParser {
+object CorporateActionParser extends DomRecordParser {
   override val schema: StructType = Schemas.corporateActions
 
-  private def optIsoMicros(rec: JsonNode, key: String): Any = {
-    val n = rec.get(key)
-    if (n == null || n.isNull || n.asText().isEmpty) null
-    else AlpacaOptions.parseIsoMicros(n.asText()).getOrElse(
-      throw new IllegalArgumentException(s"bad timestamp in '$key'"))
-  }
-  private def strDefault(rec: JsonNode, key: String, default: String): UTF8String = {
-    val n = rec.get(key)
-    utf8(if (n == null || n.isNull) default else n.asText())
-  }
-  private def dblDefault(rec: JsonNode, key: String, default: Double): Double = {
-    val n = rec.get(key)
-    if (n == null || n.isNull) default
-    else if (n.isNumber) n.asDouble()
-    else try n.asText().toDouble
-    catch { case _: NumberFormatException =>
-      throw new IllegalArgumentException(s"bad double in '$key'") }
-  }
+  private def dblDefault(rec: JsonNode, key: String): Double =
+    if (text(rec, key, null) == null) 0.0 else dbl(rec, key)
 
-  override def parse(symbol: String, rec: JsonNode): InternalRow =
-    InternalRow(
-      utf8(symbol),
-      optIsoMicros(rec, "ex_date"),
-      optIsoMicros(rec, "record_date"),
+  override protected def rows(symbol: UTF8String, rec: JsonNode): Seq[Seq[Any]] =
+    Seq(Seq(symbol,
+      optIsoMicros(rec, "ex_date"), optIsoMicros(rec, "record_date"),
       optIsoMicros(rec, "payable_date"),
-      strDefault(rec, "type", ""),
-      dblDefault(rec, "amount", 0.0),
-      dblDefault(rec, "ratio", 0.0),
-      strDefault(rec, "new_symbol", ""),
-      strDefault(rec, "old_symbol", ""))
+      text(rec, "type"), dblDefault(rec, "amount"), dblDefault(rec, "ratio"),
+      text(rec, "new_symbol"), text(rec, "old_symbol")))
 }
 
 /** Flat-envelope news article (v1beta1 `/news`): full-name keys
   * (`created_at`, `headline`, …), `symbols` array → CSV like trade
-  * conditions, nullable `updated_at`. DOM parse like corporate
-  * actions — news records are large text blobs, dozens per page, so
-  * the streaming byte walk buys nothing here (the hot tick parsers
-  * keep it); required fields are id/created_at/headline, everything
-  * else defaults (record-shape tolerance, E4 discipline). */
-object NewsParser extends RecordParser {
+  * conditions, nullable `updated_at`. Required fields are
+  * id/created_at/headline; everything else defaults (record-shape
+  * tolerance, E4 discipline). */
+object NewsParser extends DomRecordParser {
   override val schema: StructType = Schemas.news
 
-  private def strDefault(rec: JsonNode, key: String): UTF8String = {
+  private def csv(rec: JsonNode, key: String): String = {
     val n = rec.get(key)
-    utf8(if (n == null || n.isNull) "" else n.asText())
+    val sb = new StringBuilder
+    if (n != null) n.elements().forEachRemaining { e =>
+      if (sb.nonEmpty) sb.append(',')
+      sb.append(e.asText())
+    }
+    sb.toString
   }
 
-  override def parse(symbol: String, rec: JsonNode): InternalRow = {
-    val symsNode = rec.get("symbols")
-    val syms =
-      if (symsNode == null || symsNode.isNull) ""
-      else {
-        val it = symsNode.elements()
-        val sb = new StringBuilder
-        while (it.hasNext) {
-          if (sb.nonEmpty) sb.append(',')
-          sb.append(it.next().asText())
-        }
-        sb.toString
-      }
-    val upd = rec.get("updated_at")
-    InternalRow(
-      utf8(symbol),
-      isoMicros(rec, "created_at"),
-      if (upd == null || upd.isNull || upd.asText().isEmpty) null
-      else AlpacaOptions.parseIsoMicros(upd.asText()).getOrElse(
-        throw new IllegalArgumentException("bad timestamp in 'updated_at'")),
-      lng(rec, "id"),
-      utf8(reqNode(rec, "headline").asText()),
-      strDefault(rec, "author"),
-      strDefault(rec, "summary"),
-      strDefault(rec, "content"),
-      utf8(syms),
-      strDefault(rec, "source"),
-      strDefault(rec, "url"))
-  }
+  override protected def rows(symbol: UTF8String, rec: JsonNode): Seq[Seq[Any]] =
+    Seq(Seq(symbol,
+      isoMicros(rec, "created_at"), optIsoMicros(rec, "updated_at"),
+      lng(rec, "id"), reqNode(rec, "headline").asText(),
+      text(rec, "author"), text(rec, "summary"), text(rec, "content"),
+      csv(rec, "symbols"), text(rec, "source"), text(rec, "url")))
 }
 
 /** Daily auction record (v2 `/stocks/auctions`): `{d, o: [print…],
-  * c: [print…]}` → one row per print, tagged 'O'/'C' — the one
-  * FAN-OUT record shape in the API (every other source is record=row).
-  * DOM parse: auction records are low-rate (a handful of prints per
-  * symbol-day), so the streaming byte walk buys nothing. The whole
-  * record validates BEFORE the first row is emitted (parseStreamMulti
-  * contract): a bad print anywhere drops the daily record atomically
-  * under E4 warn+skip semantics. `d` is required; either print array
-  * may be absent or empty (half-days have no close; halted days no
-  * open); print fields t/x/p/s required, condition `c` optional → "". */
-object AuctionParser extends RecordParser {
+  * c: [print…]}` → one row per print, tagged 'O'/'C'. `d` is required;
+  * either print array may be absent or empty (half-days have no close;
+  * halted days no open); print fields t/x/p/s are required, condition
+  * `c` optional → "". A bad print anywhere drops the whole day. */
+object AuctionParser extends DomRecordParser {
   override val schema: StructType = Schemas.auctions
 
-  private def printRows(symbol: String, dateUs: Long, tpe: String,
-      arr: JsonNode, out: scala.collection.mutable.ArrayBuffer[InternalRow]): Unit = {
-    if (arr == null || arr.isNull) return
+  private def prints(symbol: UTF8String, dateUs: Long, tpe: String,
+      arr: JsonNode): Seq[Seq[Any]] = {
+    if (arr == null || arr.isNull) return Nil
     if (!arr.isArray)
       throw new IllegalArgumentException(s"auction '$tpe' is not an array")
-    val it = arr.elements()
-    while (it.hasNext) {
-      val p = it.next()
-      val cond = p.get("c")
-      out += InternalRow(
-        utf8(symbol),
-        dateUs,
-        utf8(tpe),
-        isoMicros(p, "t"),
-        utf8(reqNode(p, "x").asText()),
-        dbl(p, "p"),
-        lng(p, "s"),
-        utf8(if (cond == null || cond.isNull) "" else cond.asText()))
+    (0 until arr.size).map { i =>
+      val p = arr.get(i)
+      Seq(symbol, dateUs, tpe, isoMicros(p, "t"), reqNode(p, "x").asText(),
+        dbl(p, "p"), lng(p, "s"), text(p, "c"))
     }
   }
 
-  /** All prints of one daily record, validated as a unit. */
-  def parseMulti(symbol: String, rec: JsonNode): Seq[InternalRow] = {
+  override protected def rows(symbol: UTF8String, rec: JsonNode): Seq[Seq[Any]] = {
     val dRaw = reqNode(rec, "d").asText()
     val dateUs = AlpacaOptions.parseIsoMicros(dRaw).getOrElse(
       throw new IllegalArgumentException(s"bad date '$dRaw' in 'd'"))
-    val rows = new scala.collection.mutable.ArrayBuffer[InternalRow](4)
-    printRows(symbol, dateUs, "O", rec.get("o"), rows)
-    printRows(symbol, dateUs, "C", rec.get("c"), rows)
-    rows.toSeq
-  }
-
-  /** Single-row parse is meaningless for a fan-out record; the readers
-    * only ever call [[parseStreamMulti]]. */
-  override def parse(symbol: String, rec: JsonNode): InternalRow =
-    throw new UnsupportedOperationException(
-      "AuctionParser is multi-row; use parseStreamMulti")
-
-  override def parseStreamMulti(symbol: String,
-      jp: com.fasterxml.jackson.core.JsonParser,
-      out: InternalRow => Unit): Unit = {
-    // readValueAsTree consumes the subtree and leaves the stream ON
-    // the record's END_OBJECT, so a validation failure after it is
-    // already realigned for the caller's warn+skip.
-    val node = jp.readValueAsTree[JsonNode]()
-    parseMulti(symbol, node).foreach(out)
-  }
-}
-
-/** Snapshot record: the symbol's OBJECT value (the one record-is-an-
-  * object envelope in the API) with five optional nested sections,
-  * flattened to one wide row. DOM parse — one record per symbol per
-  * scan, nothing hot. A present section with a malformed required
-  * field fails the whole record (atomic E4 skip); an ABSENT section
-  * is legitimate (new listing has no prevDailyBar) and nulls its
-  * columns. */
-object SnapshotParser extends RecordParser {
-  override val schema: StructType = Schemas.snapshots
-
-  override def parse(symbol: String, rec: JsonNode): InternalRow = {
-    def section(key: String): Option[JsonNode] = {
-      val n = rec.get(key)
-      if (n == null || n.isNull) None
-      else if (!n.isObject)
-        throw new IllegalArgumentException(s"snapshot '$key' is not an object")
-      else Some(n)
-    }
-    val lt = section("latestTrade")
-    val lq = section("latestQuote")
-    val mb = section("minuteBar")
-    val db = section("dailyBar")
-    val pd = section("prevDailyBar")
-    def ts(o: Option[JsonNode]): Any = o.map(isoMicros(_, "t")).orNull
-    def d(o: Option[JsonNode], k: String): Any = o.map(dbl(_, k)).orNull
-    def l(o: Option[JsonNode], k: String): Any = o.map(lng(_, k)).orNull
-    InternalRow(
-      utf8(symbol),
-      ts(lt), d(lt, "p"), l(lt, "s"),
-      ts(lq), d(lq, "bp"), l(lq, "bs"), d(lq, "ap"), l(lq, "as"),
-      ts(mb), d(mb, "c"), l(mb, "v"),
-      ts(db), d(db, "o"), d(db, "h"), d(db, "l"), d(db, "c"), l(db, "v"),
-      d(pd, "c"))
+    prints(symbol, dateUs, "O", rec.get("o")) ++ prints(symbol, dateUs, "C", rec.get("c"))
   }
 }
 
 /** Latest-orderbook record (v1beta3 `/crypto/us/latest/orderbooks`):
-  * the symbol's OBJECT value carries `t` and two arrays of
-  * `{p, s}` depth levels; flattened to one row per level with the
-  * 1-based position from the top of book — the second fan-out record
-  * shape after auctions, and like them the whole record validates
-  * before the first row is emitted (atomic E4 skip). Either side may
-  * be absent or empty (one-sided books happen around halts); levels
-  * keep ARRAY ORDER (the venue's price-priority order) rather than
-  * re-sorting client-side. */
-object OrderbookParser extends RecordParser {
+  * the symbol's OBJECT value carries `t` and two arrays of `{p, s}`
+  * depth levels, flattened to one row per level with its 1-based
+  * position from the top of book. Either side may be absent or empty
+  * (one-sided books happen around halts); levels keep ARRAY ORDER (the
+  * venue's price-priority order) rather than re-sorting client-side. */
+object OrderbookParser extends DomRecordParser {
   override val schema: StructType = Schemas.orderbooks
 
-  private def levelRows(symbol: String, timeUs: Long, side: String,
-      arr: JsonNode, out: scala.collection.mutable.ArrayBuffer[InternalRow]): Unit = {
-    if (arr == null || arr.isNull) return
+  private def levels(symbol: UTF8String, timeUs: Long, side: String,
+      arr: JsonNode): Seq[Seq[Any]] = {
+    if (arr == null || arr.isNull) return Nil
     if (!arr.isArray)
       throw new IllegalArgumentException(s"orderbook '$side' is not an array")
-    val it = arr.elements()
-    var level = 1
-    while (it.hasNext) {
-      val p = it.next()
-      out += InternalRow(
-        utf8(symbol), timeUs, utf8(side), level, dbl(p, "p"), dbl(p, "s"))
-      level += 1
+    (0 until arr.size).map { i =>
+      val p = arr.get(i)
+      Seq(symbol, timeUs, side, i + 1, dbl(p, "p"), dbl(p, "s"))
     }
   }
 
-  def parseMulti(symbol: String, rec: JsonNode): Seq[InternalRow] = {
+  override protected def rows(symbol: UTF8String, rec: JsonNode): Seq[Seq[Any]] = {
     val timeUs = isoMicros(rec, "t")
-    val rows = new scala.collection.mutable.ArrayBuffer[InternalRow](16)
-    levelRows(symbol, timeUs, "B", rec.get("b"), rows)
-    levelRows(symbol, timeUs, "A", rec.get("a"), rows)
-    rows.toSeq
-  }
-
-  override def parse(symbol: String, rec: JsonNode): InternalRow =
-    throw new UnsupportedOperationException(
-      "OrderbookParser is multi-row; use parseStreamMulti")
-
-  override def parseStreamMulti(symbol: String,
-      jp: com.fasterxml.jackson.core.JsonParser,
-      out: InternalRow => Unit): Unit = {
-    val node = jp.readValueAsTree[JsonNode]()
-    parseMulti(symbol, node).foreach(out)
+    levels(symbol, timeUs, "B", rec.get("b")) ++ levels(symbol, timeUs, "A", rec.get("a"))
   }
 }
+
+/** Snapshot record: the symbol's OBJECT value with five optional nested
+  * sections (latestTrade/latestQuote/minuteBar/dailyBar/prevDailyBar),
+  * flattened to one wide row. A present section with a malformed
+  * required field fails the record; an ABSENT section is legitimate
+  * (a new listing has no prevDailyBar) and nulls its columns. Stock
+  * and crypto snapshots differ only in trade/quote size types. */
+sealed class SectionSnapshotParser(override val schema: StructType,
+    fractionalSizes: Boolean) extends DomRecordParser {
+  override protected def rows(symbol: UTF8String, rec: JsonNode): Seq[Seq[Any]] = {
+    val lt = section(rec, "latestTrade")
+    val lq = section(rec, "latestQuote")
+    val mb = section(rec, "minuteBar")
+    val db = section(rec, "dailyBar")
+    val pd = section(rec, "prevDailyBar")
+    def ts(o: Option[JsonNode]): Any = o.map(isoMicros(_, "t")).orNull
+    def size(o: Option[JsonNode], k: String): Any =
+      if (fractionalSizes) optDbl(o, k) else optLng(o, k)
+    Seq(Seq(symbol,
+      ts(lt), optDbl(lt, "p"), size(lt, "s"),
+      ts(lq), optDbl(lq, "bp"), size(lq, "bs"), optDbl(lq, "ap"), size(lq, "as"),
+      ts(mb), optDbl(mb, "c"), optLng(mb, "v"),
+      ts(db), optDbl(db, "o"), optDbl(db, "h"), optDbl(db, "l"), optDbl(db, "c"),
+      optLng(db, "v"),
+      optDbl(pd, "c")))
+  }
+}
+
+object SnapshotParser extends SectionSnapshotParser(Schemas.snapshots, fractionalSizes = false)
+
+/** Crypto snapshot (v1beta3): the stock snapshot's five-section
+  * flatten with fractional trade/quote sizes and no venues. */
+object CryptoSnapshotParser
+  extends SectionSnapshotParser(Schemas.cryptoSnapshots, fractionalSizes = true)
 
 /** Option-snapshot record: `impliedVolatility` scalar + nested
   * `greeks`/`latestQuote`/`latestTrade` objects → one wide row.
   * Absent sections are legitimate (new contracts have no greeks,
   * untraded ones no latestTrade) and null their columns; a PRESENT
-  * section with a malformed required field fails the record (atomic
-  * E4 skip). */
-object OptionSnapshotParser extends RecordParser {
+  * section with a malformed required field fails the record. */
+object OptionSnapshotParser extends DomRecordParser {
   override val schema: StructType = Schemas.optionSnapshots
 
-  override def parse(symbol: String, rec: JsonNode): InternalRow = {
-    def section(key: String): Option[JsonNode] = {
-      val n = rec.get(key)
-      if (n == null || n.isNull) None
-      else if (!n.isObject)
-        throw new IllegalArgumentException(s"option snapshot '$key' is not an object")
-      else Some(n)
-    }
-    val greeks = section("greeks")
-    val lq = section("latestQuote")
-    val lt = section("latestTrade")
+  override protected def rows(symbol: UTF8String, rec: JsonNode): Seq[Seq[Any]] = {
+    val greeks = section(rec, "greeks")
+    val lq = section(rec, "latestQuote")
+    val lt = section(rec, "latestTrade")
     val ivNode = rec.get("impliedVolatility")
     val iv: Any =
       if (ivNode == null || ivNode.isNull) null
       else if (ivNode.isNumber) ivNode.asDouble()
       else throw new IllegalArgumentException("bad double in 'impliedVolatility'")
-    def d(o: Option[JsonNode], k: String): Any = o.map(dbl(_, k)).orNull
-    def l(o: Option[JsonNode], k: String): Any = o.map(lng(_, k)).orNull
-    InternalRow(
-      utf8(symbol),
-      iv,
-      d(greeks, "delta"), d(greeks, "gamma"), d(greeks, "theta"),
-      d(greeks, "vega"), d(greeks, "rho"),
-      d(lq, "bp"), d(lq, "ap"),
-      d(lt, "p"), l(lt, "s"))
+    Seq(Seq(symbol, iv,
+      optDbl(greeks, "delta"), optDbl(greeks, "gamma"), optDbl(greeks, "theta"),
+      optDbl(greeks, "vega"), optDbl(greeks, "rho"),
+      optDbl(lq, "bp"), optDbl(lq, "ap"),
+      optDbl(lt, "p"), optLng(lt, "s")))
   }
 }
 
 /** Screener records carry their OWN symbol field — the passed-in
   * symbol is the partition's (empty for market-wide requests) and is
   * ignored. */
-object MostActivesParser extends RecordParser {
+object MostActivesParser extends DomRecordParser {
   override val schema: StructType = Schemas.mostActives
-  override def parse(symbol: String, rec: JsonNode): InternalRow =
-    InternalRow(
-      utf8(reqNode(rec, "symbol").asText()),
-      lng(rec, "volume"),
-      lng(rec, "trade_count"))
+  override protected def rows(symbol: UTF8String, rec: JsonNode): Seq[Seq[Any]] =
+    Seq(Seq(reqNode(rec, "symbol").asText(), lng(rec, "volume"), lng(rec, "trade_count")))
 }
 
-object MoverParser extends RecordParser {
+object MoverParser extends DomRecordParser {
   override val schema: StructType = Schemas.movers
-  override def parse(symbol: String, rec: JsonNode): InternalRow =
-    InternalRow(
-      utf8(reqNode(rec, "symbol").asText()),
-      dbl(rec, "percent_change"),
-      dbl(rec, "change"),
-      dbl(rec, "price"))
-}
-
-/** Crypto snapshot record: the stock snapshot's five-section flatten
-  * with crypto field types (fractional sizes, no venues). Absent
-  * sections null their columns; a present-but-broken section fails
-  * the record (atomic E4 skip). */
-object CryptoSnapshotParser extends RecordParser {
-  override val schema: StructType = Schemas.cryptoSnapshots
-
-  override def parse(symbol: String, rec: JsonNode): InternalRow = {
-    def section(key: String): Option[JsonNode] = {
-      val n = rec.get(key)
-      if (n == null || n.isNull) None
-      else if (!n.isObject)
-        throw new IllegalArgumentException(s"snapshot '$key' is not an object")
-      else Some(n)
-    }
-    val lt = section("latestTrade")
-    val lq = section("latestQuote")
-    val mb = section("minuteBar")
-    val db = section("dailyBar")
-    val pd = section("prevDailyBar")
-    def ts(o: Option[JsonNode]): Any = o.map(isoMicros(_, "t")).orNull
-    def d(o: Option[JsonNode], k: String): Any = o.map(dbl(_, k)).orNull
-    def l(o: Option[JsonNode], k: String): Any = o.map(lng(_, k)).orNull
-    InternalRow(
-      utf8(symbol),
-      ts(lt), d(lt, "p"), d(lt, "s"),
-      ts(lq), d(lq, "bp"), d(lq, "bs"), d(lq, "ap"), d(lq, "as"),
-      ts(mb), d(mb, "c"), l(mb, "v"),
-      ts(db), d(db, "o"), d(db, "h"), d(db, "l"), d(db, "c"), l(db, "v"),
-      d(pd, "c"))
-  }
+  override protected def rows(symbol: UTF8String, rec: JsonNode): Seq[Seq[Any]] =
+    Seq(Seq(reqNode(rec, "symbol").asText(),
+      dbl(rec, "percent_change"), dbl(rec, "change"), dbl(rec, "price")))
 }

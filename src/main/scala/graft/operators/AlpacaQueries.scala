@@ -1620,7 +1620,7 @@ object AlpacaQueries {
       .load()
 
   /** Flattened auction-print scan: one daily API record fans out to
-    * one row per opening/closing print (parseStreamMulti — the one
+    * one row per opening/closing print (a fan-out decode — the one
     * record shape in the API where record ≠ row). */
   def auctionsScan(spark: SparkSession, dir: String): DataFrame =
     auctionsDf(spark)

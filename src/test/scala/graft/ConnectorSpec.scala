@@ -350,12 +350,9 @@ class ConnectorSpec extends AnyFunSuite with BeforeAndAfterAll {
       s"expected the scan-integrity ordering guard, got: ${causeChain(e)}")
   }
 
-  test("scan integrity: row-based (streaming) path catches the same faults") {
-    // force the row reader by disabling columnar via a stream-shaped
-    // read: simplest equivalent is the non-vectorized path through
-    // pages.flatten — exercised here by pruning to the full schema and
-    // using the micro-batch reader factory's row route indirectly.
-    // Direct unit check: AlpacaPartitionReader over the DUPPAGE chain.
+  test("scan integrity: the partition reader itself fails a duplicated page chain") {
+    // Direct unit check of the one partition reader (batch and stream
+    // alike) over the DUPPAGE chain, outside any Spark plan.
     import graft.connector._
     val cfg = AlpacaScanConfig(
       endpoint = graft.core.AlpacaOptions.stripApiVersion(AlpacaStubServer.endpoint),
@@ -366,12 +363,12 @@ class ConnectorSpec extends AnyFunSuite with BeforeAndAfterAll {
       startMicros = graft.core.AlpacaOptions.parseIsoMicros("2021-01-04T00:00:00Z").get,
       endMicros = graft.core.AlpacaOptions.parseIsoMicros("2021-01-05T00:00:00Z").get,
       limit = 10000)
-    val reader = new AlpacaPartitionReader(cfg, StockBarsDef.versionedPath,
+    val reader = new AlpacaColumnarPartitionReader(cfg, StockBarsDef.versionedPath,
       StockBarsDef.dataKey, StockBarsDef.parser,
       SymbolTimeRangePartition("DUPPAGE", cfg.startMicros, cfg.endMicros),
       StockBarsDef.schema, checkable = true)
     val e = intercept[ScanIntegrityException] {
-      while (reader.next()) reader.get()
+      try while (reader.next()) reader.get() finally reader.close()
     }
     assert(e.getMessage.contains("out-of-order instant"))
   }
@@ -398,6 +395,79 @@ class ConnectorSpec extends AnyFunSuite with BeforeAndAfterAll {
     val rows = hostileReader("MALFORMED").load()
       .select(col("time"), col("close")).collect()
     assert(rows.length == 24, s"expected the 24 well-formed bars, got ${rows.length}")
+  }
+
+  test("struct value in a string field skips only its record, checks on or off") {
+    // A 4-record trades page whose 2nd record carries "x": ["V"] — once
+    // mid-record, once as the record's last field. That is RECORD-level
+    // damage (E4): the record is skipped, the walk stays aligned, the
+    // records behind it survive, and the count invariant still holds
+    // (the lex skim counts 4 record objects, so does the walk).
+    import java.net.InetSocketAddress
+    import java.nio.charset.StandardCharsets
+    import com.sun.net.httpserver.HttpServer
+    def rec(i: Int, fields: String) =
+      s"""{"t": "2021-01-04T14:30:0${i}Z", $fields, "p": $i.0, "s": $i, "i": $i}"""
+    val good = (1 to 4).map(i => rec(i, """"x": "V", "c": ["@"], "z": "C""""))
+    val bad = Map(
+      "MIDARRAY" -> rec(2, """"x": ["V"], "c": [], "z": "C""""),
+      "LASTARRAY" -> (rec(2, """"c": [], "z": "C"""").stripSuffix("}") + """, "x": ["V"]}"""))
+    val server = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
+    server.createContext("/v2/stocks/trades", { ex =>
+      val sym = "(?:^|&)symbols=([^&]*)".r
+        .findFirstMatchIn(ex.getRequestURI.getRawQuery).map(_.group(1)).getOrElse("")
+      val records = good.updated(1, bad(sym)).mkString(", ")
+      val b = s"""{"trades": {"$sym": [$records]}, "next_page_token": null}"""
+        .getBytes(StandardCharsets.UTF_8)
+      ex.sendResponseHeaders(200, b.length)
+      ex.getResponseBody.write(b)
+      ex.close()
+    })
+    server.start()
+    try {
+      for (sym <- bad.keys; checks <- Seq("true", "false")) {
+        val rows = spark.read.format("Alpaca_Stocks_Trades").options(Map(
+          "endpoint" -> s"http://127.0.0.1:${server.getAddress.getPort}/v2",
+          "APCA-API-KEY-ID" -> "k", "APCA-API-SECRET-KEY" -> "s",
+          "symbols" -> s"['$sym']", "integrity_checks" -> checks,
+          "start" -> "2021-01-04T00:00:00Z", "end" -> "2021-01-05T00:00:00Z"))
+          .load().select("id", "exchange").collect()
+        assert(rows.map(_.getLong(0)).toSeq == Seq(1L, 3L, 4L),
+          s"$sym integrity_checks=$checks: ${rows.toSeq}")
+        assert(rows.forall(_.getString(1) == "V"))
+      }
+    } finally server.stop(0)
+  }
+
+  test("pushed LIMIT inside a fan-out auction record caps each partition exactly") {
+    // LIMIT 1 against daily records of 1-3 prints: the cap lands inside
+    // the record, so the reader emits only the record's first print
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+    import graft.connector.AlpacaScan
+    def auctions = spark.read.format("Alpaca_Stocks_Auctions").options(Map(
+      "endpoint" -> AlpacaStubServer.endpoint,
+      "APCA-API-KEY-ID" -> "k", "APCA-API-SECRET-KEY" -> "s",
+      "symbols" -> "['AAPL']",
+      "start" -> "2021-01-04T00:00:00Z", "end" -> "2021-01-16T00:00:00Z")).load()
+    def perPartition(df: org.apache.spark.sql.DataFrame): Seq[Seq[Seq[Any]]] = {
+      val scan = df.queryExecution.sparkPlan.collectFirst {
+        case b: BatchScanExec => b.scan.asInstanceOf[AlpacaScan]
+      }.get
+      val factory = scan.createReaderFactory()
+      scan.planInputPartitions().toSeq.map { p =>
+        val r = factory.createColumnarReader(p)
+        try Iterator.continually(r.next()).takeWhile(identity).flatMap { _ =>
+          r.get().rowIterator().asScala.map(_.copy().toSeq(scan.readSchema()))
+        }.toList
+        finally r.close()
+      }
+    }
+    val full = perPartition(auctions)
+    val capped = perPartition(auctions.limit(1))
+    assert(full.exists(_.size >= 2), "fixture must hold multi-print days")
+    assert(capped == full.map(_.take(1)))
+    assert(auctions.limit(1).collect().length == 1)
   }
 
   test("page with >10x the requested limit is ingested, not truncated") {

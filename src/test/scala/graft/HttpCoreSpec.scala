@@ -3,6 +3,7 @@ package graft
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
 
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.sun.net.httpserver.HttpServer
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -17,6 +18,11 @@ class HttpCoreSpec extends AnyFunSuite with BeforeAndAfterAll {
   private var server: HttpServer = _
   private var endpoint: String = _
   @volatile private var requests = Vector.empty[String]
+
+  private val mapper = new ObjectMapper()
+  private def readTree(bytes: Array[Byte]): JsonNode = mapper.readTree(bytes)
+  private def jsonPages(c: AlpacaHttpClient, params: Seq[(String, String)]): Iterator[JsonNode] =
+    c.fetchAllPagesCounted(params).map(p => readTree(p.bytes))
 
   override def beforeAll(): Unit = {
     server = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
@@ -54,7 +60,7 @@ class HttpCoreSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("pagination: token sequence walked lazily until null") {
     val c = new AlpacaHttpClient(endpoint, Map.empty, Seq("pages"))
-    val it = c.fetchAllPages(Seq("q" -> "1"))
+    val it = jsonPages(c, Seq("q" -> "1"))
     val before = requests.size
     assert(it.hasNext) // iterator is lazy: nothing fetched yet at creation
     val pages = it.map(_.get("n").asInt()).toList
@@ -86,7 +92,7 @@ class HttpCoreSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(expectAsc.size == 26)
 
     def times(sort: String): Seq[Long] =
-      c.fetchAllPages(base :+ ("sort" -> sort)).flatMap { pg =>
+      jsonPages(c, base :+ ("sort" -> sort)).flatMap { pg =>
         val arr = pg.get("bars").get("GRID")
         (0 until arr.size).map(i =>
           graft.core.AlpacaOptions.parseIsoMicros(arr.get(i).get("t").asText()).get)
@@ -108,12 +114,12 @@ class HttpCoreSpec extends AnyFunSuite with BeforeAndAfterAll {
     // IOException surfaces through the network-failure path
     val fast = new AlpacaHttpClient(endpoint, Map.empty, Seq("slow"),
       readTimeoutSec = 0.2)
-    val e = intercept[RuntimeException](fast.getPage(Seq("q" -> "1"), None))
+    val e = intercept[RuntimeException](fast.getPageBytes(Seq("q" -> "1"), None))
     assert(e.getMessage.contains("Network request failed"), s"unexpected: $e")
     // an adequate budget succeeds against the same endpoint
     val ok = new AlpacaHttpClient(endpoint, Map.empty, Seq("slow"),
       readTimeoutSec = 5.0)
-    assert(ok.getPage(Seq("q" -> "1"), None).get("n").asInt() == 1)
+    assert(readTree(ok.getPageBytes(Seq("q" -> "1"), None)).get("n").asInt() == 1)
   }
 
   test("prefetch path surfaces mid-pagination HTTP errors unwrapped") {
@@ -134,7 +140,7 @@ class HttpCoreSpec extends AnyFunSuite with BeforeAndAfterAll {
       ex.close()
     })
     val c = new AlpacaHttpClient(endpoint, Map.empty, Seq("flaky_pages"))
-    val it = c.fetchAllPages(Seq("q" -> "1"))
+    val it = jsonPages(c, Seq("q" -> "1"))
     assert(it.next().get("n").asInt() == 1)
     val e = intercept[RuntimeException](it.next())
     assert(e.getMessage.contains("404") && e.getMessage.contains("no such page"),
